@@ -127,6 +127,11 @@ def _safe_prefix(
       driver (``known_symbols``).  A colliding merge is itself still
       the proven argmax, but pairs involving the collided symbol can
       GAIN occurrences, so the batch stops right after it.
+    - A self-merge (x, x) is the one accepted merge whose new pairs are
+      NOT bounded by a different list pair: (xx, x) and (xx, xx) map to
+      occurrences of (x, x) itself, which the shadow scan skips as
+      accepted.  They can outrank every later candidate, so the batch
+      also stops right after any merge with l == r.
 
     Returns ``(accepted, done)``; ``done`` means the PROVEN next argmax
     fell below ``min_pair_count``, i.e. training may stop without
@@ -167,6 +172,8 @@ def _safe_prefix(
         if fused in known_symbols:
             break
         known_symbols.add(fused)
+        if l == r:
+            break
     return accepted, False
 
 
@@ -192,10 +199,11 @@ def bpe_train(
     pair counts and applies, in one Arrow pass, the longest prefix that
     the collected counts PROVE equals the next one-at-a-time argmax
     sequence (symbol-disjointness + strict-boundary + tie-shadow +
-    fused-string-collision guards).  Worst case the prefix is 1 merge —
-    the original loop; measured on the declared corpora it cuts 20
-    rounds to ~13 with a byte-identical merge list.  At production
-    vocab sizes (30k-100k merges) the same device batches ~K-fold."""
+    fused-string-collision guards, and a stop after any self-merge).
+    Worst case the prefix is 1 merge — the original loop; measured on
+    the declared corpora it cuts 20 rounds to ~13 with a byte-identical
+    merge list.  At production vocab sizes (30k-100k merges) the same
+    device batches ~K-fold."""
     work = _word_freq(docs, text_col).select(
         F.concat(
             F.split(F.col("w"), ""), F.array(F.lit(END))

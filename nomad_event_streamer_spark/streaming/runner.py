@@ -8,7 +8,11 @@ with a checkpointed Structured Streaming query:
   in-memory per-key staleness filter (app.rb:145-167) — relaxed
   semantics; the bit-faithful variant is streaming.dedup_state;
 - ``foreachBatch`` fans out to the webhook sinks (app.rb:211-267),
-  upgrading at-most-once to at-least-once with idempotent keys.
+  upgrading at-most-once to at-least-once with idempotent keys; each
+  micro-batch is computed and cached once, so the dedup and its state
+  commits run once however many destinations it feeds, and it is
+  delivered from one partition per core (a Python task's fixed cost
+  outweighs a small batch's rows).
 """
 
 from __future__ import annotations

@@ -10,6 +10,7 @@ from nomad_event_streamer_spark.sources.synthetic import sample_stream
 from nomad_event_streamer_spark.streaming.runner import (
     build_stream,
     read_ndjson_stream,
+    start_webhook_query,
 )
 from nomad_event_streamer_spark.streaming.sinks import (
     discord_payload,
@@ -154,3 +155,71 @@ def test_http_fresh_connection_close_raises_not_retries(tmp_path, spark):
         assert len(hits) == 1
     finally:
         srv.shutdown()
+
+
+def test_batch_computed_once_and_delivered_per_core(tmp_path, spark):
+    """Each micro-batch runs its stateful plan once, however many
+    destinations it feeds, and each destination gets the batch in one
+    partition per core with every task's events in (raft_index,
+    event_time_ns) order.  Shuffle partitions are set apart from the
+    core count so the two widths can be told apart."""
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    (input_dir / "a.ndjson").write_text("\n".join(sample_stream(6)) + "\n")
+    cores = spark.sparkContext.defaultParallelism
+    shuffle = 3
+    assert cores != shuffle
+
+    recorded: dict[str, list] = {}
+
+    def record(payloads, destination):
+        # one (partition index, keys in delivery order) item per partition
+        recorded.setdefault(destination, []).append(
+            payloads.rdd.mapPartitionsWithIndex(
+                lambda i, rows: [
+                    (
+                        i,
+                        [
+                            (r["task_identifier"], r["raft_index"], r["event_time_ns"])
+                            for r in rows
+                        ],
+                    )
+                ]
+            ).collect()
+        )
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+    try:
+        q = start_webhook_query(
+            build_stream(read_ndjson_stream(spark, str(input_dir))),
+            str(tmp_path / "ckpt"),
+            str(tmp_path / "out"),
+            transport=record,
+        )
+        q.awaitTermination(120)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+    assert set(recorded) == {"discord", "slack"}
+    progress = [p for p in q.recentProgress if p["stateOperators"]]
+    assert progress
+    for p in progress:
+        assert p["stateOperators"][0]["numStateStoreInstances"] == shuffle
+
+    delivered = 0
+    ordered_runs = 0
+    for calls in recorded.values():
+        for parts in calls:
+            assert len(parts) == cores
+            home: dict[str, int] = {}
+            for i, keys in parts:
+                per_task: dict[str, list] = {}
+                for task, raft, ns in keys:
+                    assert home.setdefault(task, i) == i  # one partition per task
+                    per_task.setdefault(task, []).append((raft, ns))
+                for seq in per_task.values():
+                    assert seq == sorted(seq)
+                    ordered_runs += len(seq) > 1
+                delivered += len(keys)
+    assert delivered > 0 and ordered_runs > 0
