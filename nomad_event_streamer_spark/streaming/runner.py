@@ -6,13 +6,12 @@ with a checkpointed Structured Streaming query:
 - source offsets replace the starting_index bookkeeping (app.rb:63-72);
 - ``withWatermark`` + ``dropDuplicatesWithinWatermark`` replaces the
   in-memory per-key staleness filter (app.rb:145-167) — relaxed
-  semantics; the bit-faithful variant is streaming.dedup_state;
+  semantics; the bit-faithful variant is streaming.dedup_state.  Its
+  state has one partition per core, each committing files every batch;
 - ``foreachBatch`` fans out to the webhook sinks (app.rb:211-267),
   upgrading at-most-once to at-least-once with idempotent keys; each
-  micro-batch is computed and cached once, so the dedup and its state
-  commits run once however many destinations it feeds, and it is
-  delivered from one partition per core (a Python task's fixed cost
-  outweighs a small batch's rows).
+  micro-batch is computed and cached once (one dedup and state commit
+  per batch) and delivered from one partition per core.
 """
 
 from __future__ import annotations
@@ -24,7 +23,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..session import ensure_runtime_confs
 from .pipeline import task_event_pipeline
-from .sinks import parquet_transport, webhook_foreach_batch
+from .sinks import batch_overwrite_transport, effectively_once, parquet_transport
+from .sinks import webhook_foreach_batch, webhook_foreach_batch_v2
 
 
 ROCKSDB_PROVIDER = (
@@ -64,6 +64,23 @@ def build_stream(
     )
 
 
+def _start(
+    deduped: DataFrame, body: Callable, checkpoint_dir: str, available_now: bool
+) -> StreamingQuery:
+    """Start ``body`` over ``deduped`` with a per-core state width.  The query
+    copies the session as it is built, so the width is set only around it."""
+    trigger = {"availableNow": True} if available_now else {"processingTime": "5 seconds"}
+    writer = deduped.writeStream.foreachBatch(body).trigger(**trigger)
+    writer = writer.option("checkpointLocation", checkpoint_dir).outputMode("append")
+    spark = deduped.sparkSession
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
 def start_webhook_query(
     deduped: DataFrame,
     checkpoint_dir: str,
@@ -71,17 +88,13 @@ def start_webhook_query(
     transport: Callable[[DataFrame, str], None] | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
+    """At-least-once delivery of ``deduped`` through ``transport`` (parquet
+    under ``output_dir`` by default).  A new checkpoint gets one dedup state
+    partition per core, not one per shuffle partition: each state partition
+    writes delta and checksum files every batch, a fixed cost small batches
+    do not repay.  The width is fixed when the checkpoint is created."""
     transport = transport or parquet_transport(output_dir)
-    writer = (
-        deduped.writeStream.foreachBatch(webhook_foreach_batch(transport))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="5 seconds")
-    return writer.start()
+    return _start(deduped, webhook_foreach_batch(transport), checkpoint_dir, available_now)
 
 
 def start_webhook_query_v2(
@@ -96,23 +109,8 @@ def start_webhook_query_v2(
     neither duplicate files nor re-POST delivered batches.  (The
     reference is at-most-once — app.rb:229-234 — this strictly
     strengthens it.)"""
-    from .sinks import (
-        batch_overwrite_transport,
-        effectively_once,
-        webhook_foreach_batch_v2,
-    )
-
     body = effectively_once(
         webhook_foreach_batch_v2(batch_overwrite_transport(output_dir)),
         ledger_dir,
     )
-    writer = (
-        deduped.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="5 seconds")
-    return writer.start()
+    return _start(deduped, body, checkpoint_dir, available_now)

@@ -11,6 +11,7 @@ from nomad_event_streamer_spark.streaming.runner import (
     build_stream,
     read_ndjson_stream,
     start_webhook_query,
+    start_webhook_query_v2,
 )
 from nomad_event_streamer_spark.streaming.sinks import (
     discord_payload,
@@ -39,6 +40,14 @@ def _serve() -> tuple[ThreadingHTTPServer, str]:
     srv = ThreadingHTTPServer(("127.0.0.1", 0), _Recorder)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     return srv, f"http://127.0.0.1:{srv.server_port}"
+
+
+def _state_widths(query) -> set[int]:
+    return {
+        p["stateOperators"][0]["numStateStoreInstances"]
+        for p in query.recentProgress
+        if p["stateOperators"]
+    }
 
 
 def test_http_post_bodies_match_payload_projection(tmp_path, spark):
@@ -162,7 +171,8 @@ def test_batch_computed_once_and_delivered_per_core(tmp_path, spark):
     destinations it feeds, and each destination gets the batch in one
     partition per core with every task's events in (raft_index,
     event_time_ns) order.  Shuffle partitions are set apart from the
-    core count so the two widths can be told apart."""
+    core count: the state is one partition per core too, so a second
+    computation of the batch would read twice the core count."""
     input_dir = tmp_path / "in"
     input_dir.mkdir()
     (input_dir / "a.ndjson").write_text("\n".join(sample_stream(6)) + "\n")
@@ -202,10 +212,7 @@ def test_batch_computed_once_and_delivered_per_core(tmp_path, spark):
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
     assert set(recorded) == {"discord", "slack"}
-    progress = [p for p in q.recentProgress if p["stateOperators"]]
-    assert progress
-    for p in progress:
-        assert p["stateOperators"][0]["numStateStoreInstances"] == shuffle
+    assert _state_widths(q) == {cores}
 
     delivered = 0
     ordered_runs = 0
@@ -223,3 +230,70 @@ def test_batch_computed_once_and_delivered_per_core(tmp_path, spark):
                     ordered_runs += len(seq) > 1
                 delivered += len(keys)
     assert delivered > 0 and ordered_runs > 0
+
+
+def test_state_width_per_core_on_new_checkpoints_only(tmp_path, spark):
+    """Both starters give a new checkpoint one dedup state partition per
+    core and hand the caller's shuffle width back once ``start()``
+    returns; a checkpoint created at another width restarts at that
+    width, and its state still drops envelopes replayed from before the
+    restart."""
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    shuffle = 3
+    assert cores != shuffle
+    lines = sample_stream(6)
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    (input_dir / "a.ndjson").write_text("\n".join(lines) + "\n")
+    delivered: list[int] = []
+
+    def record(payloads, destination):
+        delivered.append(payloads.count())
+
+    def stream():
+        return build_stream(read_ndjson_stream(spark, str(input_dir)))
+
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(shuffle))
+    try:
+        starters = {
+            "v1": lambda ckpt: start_webhook_query(
+                stream(), ckpt, str(tmp_path / "out1"), transport=record
+            ),
+            "v2": lambda ckpt: start_webhook_query_v2(
+                stream(), ckpt, str(tmp_path / "out2"), str(tmp_path / "ledger")
+            ),
+        }
+        for name, start in starters.items():
+            q = start(str(tmp_path / f"ckpt_{name}"))
+            assert spark.conf.get(key) == str(shuffle)
+            q.awaitTermination(120)
+            assert q.exception() is None
+            assert _state_widths(q) == {cores}, name
+
+        # a checkpoint created by a plain writeStream at the session width
+        delivered.clear()
+        ckpt = str(tmp_path / "ckpt_plain")
+        q = (
+            stream()
+            .writeStream.foreachBatch(webhook_foreach_batch(record))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert _state_widths(q) == {shuffle}
+        assert sum(delivered) > 0
+
+        delivered.clear()
+        (input_dir / "b.ndjson").write_text("\n".join(lines[:3]) + "\n")
+        q = start_webhook_query(stream(), ckpt, str(tmp_path / "out3"), transport=record)
+        assert spark.conf.get(key) == str(shuffle)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        assert _state_widths(q) == {shuffle}
+        assert sum(p["numInputRows"] for p in q.recentProgress) > 0
+        assert sum(delivered) == 0
+    finally:
+        spark.conf.set(key, before)
