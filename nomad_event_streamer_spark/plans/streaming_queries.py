@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..session import ensure_runtime_confs
 from ..streaming.dedup_state import summary_stream
-from ..tables import canonicalize_events_ts
+from ..tables import canonicalize_events_ts, load, schema as table_schema
 from .registry import query
 
 
@@ -55,7 +55,7 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as a bounded file stream (schema pinned from the batch
     reader — streaming sources never infer)."""
     ensure_runtime_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = table_schema(spark, sf_dir, "events")
     stream = spark.readStream.schema(schema).parquet(_events_stream_dir(sf_dir))
     return canonicalize_events_ts(stream)
 
@@ -63,7 +63,7 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents as a bounded file stream (same schema-pinning rule)."""
     ensure_runtime_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = table_schema(spark, sf_dir, "documents")
     return spark.readStream.schema(schema).parquet(
         _table_stream_dir(sf_dir, "documents")
     )
@@ -624,7 +624,6 @@ def q_stream_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     each arriving micro-batch shuffles nothing and probes the index by
     key — the posture an always-on crawl ingest needs."""
     from ..operators import dedup
-    from ..tables import load
 
     docs = load(spark, sf_dir, "documents")
     idx = docs.where(F.col("doc_id") % 2 == 0)
@@ -804,9 +803,7 @@ def _late_batches_dir(spark: SparkSession, sf_dir: str) -> str:
         import glob
         import shutil
 
-        ev = canonicalize_events_ts(
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-        ).select("event_id", "user_id", "ts")
+        ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
         work = tempfile.mkdtemp(prefix="nes_late_work_")
         out = tempfile.mkdtemp(prefix="nes_late_in_")
         for b in range(3):
@@ -900,9 +897,7 @@ def _upsert_batches_dir(spark: SparkSession, sf_dir: str) -> str:
         import glob
         import shutil
 
-        ev = canonicalize_events_ts(
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-        ).select(
+        ev = load(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
             "event_type",
@@ -1095,9 +1090,7 @@ def _doc_batches_dir(spark: SparkSession, sf_dir: str) -> str:
         import glob
         import shutil
 
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text"
-        )
+        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
         n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
         cuts = [(0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n)]
         work = tempfile.mkdtemp(prefix="nes_ttl_work_")
@@ -1374,7 +1367,7 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_runtime_confs(spark)
     n = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load(spark, sf_dir, "documents")
         .agg(F.max("doc_id"))
         .collect()[0][0]
         + 1

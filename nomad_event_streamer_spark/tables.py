@@ -18,12 +18,24 @@ downstream expression is encoding-independent.  Derived columns:
 All declared query outputs emit *bigint epochs or formatted strings* rather
 than raw timestamps, so the driver's value-hash never depends on an
 engine-specific timestamp serialization.
+
+Schema cache: a parquet read without a schema runs a one-task Spark job
+to read the file footer (about 65 ms of wall time each) before the
+DataFrame exists, and a registry query loads up to five tables.  So
+``schema`` infers each table's schema once and ``load`` reads with it,
+as a metastore would.  The key is the file's identity (qualified path,
+modification time and length, from the Hadoop ``FileSystem``) plus the
+set session confs that shape the inferred schema (``spark.sql.parquet.*``,
+``spark.sql.legacy.parquet.*``, ``spark.sql.caseSensitive``), so a
+rewritten table or a changed conf infers again.  Only the ``StructType``
+is cached: no data and no plans.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .session import ensure_runtime_confs
 
@@ -39,6 +51,15 @@ TABLE_NAMES = [
     "documents",
     "embeddings",
 ]
+
+# Session confs that change the schema Spark infers from a parquet footer
+# (the inputs of ParquetToSparkSchemaConverter, and mergeSchema).
+_SCHEMA_CONF_PREFIXES = ("spark.sql.parquet.", "spark.sql.legacy.parquet.")
+_SCHEMA_CONFS = ("spark.sql.caseSensitive",)
+
+# Inferred schemas by (qualified path, mtime, length, schema-shaping confs).
+_SCHEMAS: dict[tuple, StructType] = {}
+
 
 def ts_us():
     """usec-epoch long from the ns-epoch long (floor division == DuckDB
@@ -83,11 +104,58 @@ def canonicalize_events_ts(df: DataFrame) -> DataFrame:
     )
 
 
+def _schema_key(spark: SparkSession, path: str) -> tuple:
+    """The file's identity and the set confs that shape its schema."""
+    sc = spark.sparkContext
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    status = jpath.getFileSystem(sc._jsc.hadoopConfiguration()).getFileStatus(jpath)
+    # One round trip for the set keys; reading the whole map through py4j
+    # costs about 25 ms.
+    jconf = spark._jsparkSession.conf()
+    keys = jconf.getAll().keys().mkString("\n").split("\n")
+    confs = tuple(
+        (k, jconf.get(k))
+        for k in sorted(keys)
+        if k.startswith(_SCHEMA_CONF_PREFIXES) or k in _SCHEMA_CONFS
+    )
+    return (
+        status.getPath().toString(),
+        status.getModificationTime(),
+        status.getLen(),
+        confs,
+    )
+
+
+def schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """One table's parquet schema exactly as an inferring read gives it,
+    before ``canonicalize_events_ts``.
+
+    Inferred once per key and then cached: the key is the file's
+    qualified path, modification time and length plus the set
+    ``spark.sql.parquet.*``, ``spark.sql.legacy.parquet.*`` and
+    ``spark.sql.caseSensitive`` confs, so a rewritten file or a changed
+    conf infers again.  Inference runs a one-task footer job (about
+    65 ms of wall time); the key costs a few py4j round trips.  Only the
+    schema is cached, never data or plans.  Applies runtime confs first,
+    like ``load``."""
+    ensure_runtime_confs(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    key = _schema_key(spark, path)
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return _SCHEMAS[key]
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table; applies runtime confs first so the ns
-    parquet type and UTC session TZ are always in effect."""
-    ensure_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    parquet type and UTC session TZ are always in effect.
+
+    Reads with the cached ``schema`` (see there for the key), so only
+    the first load of a table runs the footer-reading Spark job; data
+    and plans are not cached."""
+    df = spark.read.schema(schema(spark, sf_dir, name)).parquet(
+        f"{sf_dir}/{name}.parquet"
+    )
     if name == "events":
         df = canonicalize_events_ts(df)
     return df
