@@ -11,6 +11,18 @@ Design notes for 100 TB posture (SURVEY.md section 4.3):
   time model (ns-epoch ints built in ``app.rb:10-23`` and compared in
   ``app.rb:154-167``); conversion to usec timestamps is explicit at the
   query layer (``tables.ts_us_expr``).
+- ``spark.sql.sources.parallelPartitionDiscovery.threshold`` 1024: a
+  file-stream micro-batch (``FileStreamSource.getBatch``) re-lists its
+  own files, one root path per file, and above this threshold (Spark's
+  default is 32) that listing runs as a Spark job with one task per
+  file.  A Nomad replay batch names 100-200 files, so every batch paid a
+  job of that many one-stat tasks.  The source reads the conf from the
+  reader's session on every batch, not from the query's copy, so it
+  must be set session-wide.  1024 is several times a live batch's file
+  count; a batch read that names 33-1024 root paths (or that many
+  subdirectories) now lists them serially on the driver, which is
+  faster on local disk but up to 1024 serial stats on an object store.
+  No batch read in this package names more than a few paths.
 
 All confs here are *runtime-settable* so they work both on sessions we
 build and on sessions handed to us by the verification driver.
@@ -37,6 +49,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # Deterministic session timezone so timestamp<->epoch conversions match
     # the DuckDB oracle regardless of host TZ.
     "spark.sql.session.timeZone": "UTC",
+    # A file-stream batch lists its files on the driver, not in a
+    # one-task-per-file job (module docstring).
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
 }
 
 # Confs that must be set before the JVM/session starts.

@@ -46,7 +46,8 @@ def use_rocksdb_state(spark: SparkSession) -> SparkSession:
 
 def read_ndjson_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """NDJSON file stream (the fixture-replay source; swap for the
-    nomad_events DataSource in live deployments)."""
+    nomad_events DataSource in live deployments).  Each micro-batch lists
+    its files on the driver (``session.RUNTIME_CONFS`` listing threshold)."""
     ensure_runtime_confs(spark)
     return spark.readStream.text(input_dir)
 

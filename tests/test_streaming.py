@@ -11,7 +11,13 @@ import uuid
 
 import pyspark.sql.functions as F
 
-from nomad_event_streamer_spark.sources.synthetic import sample_stream
+from nomad_event_streamer_spark.sources.synthetic import (
+    BASE_NS,
+    allocation,
+    envelope,
+    sample_stream,
+    task_event,
+)
 from nomad_event_streamer_spark.streaming.dedup_state import dedup_stream
 from nomad_event_streamer_spark.streaming.runner import (
     build_stream,
@@ -62,6 +68,53 @@ def test_webhook_pipeline_end_to_end(tmp_path, spark):
     assert s_rows > 0, "slack failure color must appear"
     # slack bold rewrite: no '**' remains (app.rb:245)
     assert slack.where(F.col("payload").contains("**")).count() == 0
+
+
+def test_file_batch_lists_its_files_on_the_driver(tmp_path, spark):
+    """A micro-batch over many new files lists them on the driver:
+    ``FileStreamSource.getBatch`` re-lists the batch's files, one root
+    path each, and above the session's listing threshold that listing is
+    a Spark job with one task per file.  No stage of the batch may have
+    a task per file, and each file's event arrives exactly once."""
+    n_files = 40
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    times = [BASE_NS + i * 1_000_000_000 for i in range(n_files)]
+    for i, t in enumerate(times):
+        alloc = allocation("default", "job", "node", {f"task{i}": [task_event("Started", t)]})
+        line = json.dumps(envelope(i + 1, [alloc]), separators=(",", ":"))
+        (input_dir / f"{i:03d}.ndjson").write_text(line + "\n")
+
+    delivered: dict[str, list[int]] = {}
+
+    def record(payloads, destination):
+        rows = payloads.select("event_time_ns").collect()
+        delivered.setdefault(destination, []).extend(r.event_time_ns for r in rows)
+
+    q = start_webhook_query(
+        build_stream(read_ndjson_stream(spark, str(input_dir))),
+        str(tmp_path / "ckpt"),
+        str(tmp_path / "out"),
+        transport=record,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    # one batch named all the files
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [n_files]
+
+    tracker = spark.sparkContext.statusTracker()
+    stage_tasks = [
+        stage.numTasks
+        for job_id in tracker.getJobIdsForGroup(str(q.runId))
+        for stage_id in tracker.getJobInfo(job_id).stageIds
+        if (stage := tracker.getStageInfo(stage_id)) is not None
+    ]
+    assert stage_tasks, "the batch's jobs must run under the query's run id"
+    assert max(stage_tasks) < n_files, stage_tasks
+    assert {d: sorted(ts) for d, ts in delivered.items()} == {
+        "discord": times,
+        "slack": times,
+    }
 
 
 def test_exact_state_dedup_across_batches(tmp_path, spark):
