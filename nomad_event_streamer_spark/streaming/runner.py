@@ -11,7 +11,7 @@ with a checkpointed Structured Streaming query:
 - ``foreachBatch`` fans out to the webhook sinks (app.rb:211-267),
   upgrading at-most-once to at-least-once with idempotent keys; each
   micro-batch is computed and cached once (one dedup and state commit
-  per batch) and delivered from one partition per core.
+  per batch), and ``sinks.http_transport`` POSTs it from the driver.
 """
 
 from __future__ import annotations

@@ -7,14 +7,17 @@ that fans out each micro-batch to every destination — checkpointed, so
 the pipeline upgrades to at-least-once with idempotent keys
 (raft_index, task_identifier, event_type, event_time_ns).
 
-Actual HTTP POSTing is injectable: the default "transport" appends to a
-parquet directory (the test/dev stand-in); a real deployment passes a
-requests-based sender into ``webhook_foreach_batch``.
+Delivery is injectable: the default "transport" appends to a parquet
+directory (the test/dev stand-in); ``http_transport`` POSTs each event
+from the driver, in order, over one keep-alive connection per
+destination and batch (stdlib ``http.client``).
 """
 
 from __future__ import annotations
 
+import http.client
 from collections.abc import Callable
+from urllib.parse import urlsplit
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -120,112 +123,94 @@ def http_transport(
     (app.rb:229-234,258-262): one POST per event, JSON body, no
     application-level retry — a failed POST raises and fails the batch.
 
-    Delivery guarantee, stated precisely: at-MOST-once only while a Spark
-    task runs exactly once.  A mid-partition failure followed by a Spark
-    TASK RETRY re-POSTs every row of that partition that was already
-    delivered before the failure, and a stale keep-alive reconnect can
-    resend one in-flight request — so under retries delivery is
-    at-LEAST-once per row, and per-partition ordering restarts from the
-    first row on each attempt.  Receivers must be idempotent, or compose
-    with ``effectively_once`` (ledger skips redelivered batches) and/or
-    run the sink stage with ``spark.task.maxFailures=1`` to forbid task
-    retries outright.  (The reference itself is fire-and-forget.)
+    Delivery runs on the driver, sequentially per destination: ``send``
+    collects the payload column and POSTs the rows in order over one
+    ``http.client`` connection (keep-alive reuse on HTTP/1.1 servers,
+    transparent reopen on HTTP/1.0), so no Python worker task starts.
+    The caller (``_deliver_once``) has hash-partitioned the batch by
+    ``task_identifier`` and sorted each partition by (raft_index,
+    event_time_ns); ``collect()`` returns the partitions in order, so
+    per-task event order matches the reference's sequential loop.
 
-    Scale shape: POSTs run on the EXECUTORS via ``foreachPartition`` —
-    parallel across partitions, strictly sequential within one — and the
-    caller (``webhook_foreach_batch``) has already hash-partitioned by
-    ``task_identifier`` into one partition per core
-    (``defaultParallelism``) and sorted by (raft_index, event_time_ns),
-    so per-task event order matches the reference's sequential loop
-    while unrelated tasks deliver concurrently.  The width is per core,
-    not ``spark.sql.shuffle.partitions``, because each partition costs a
-    Python worker task with a fixed start-up price (about 0.3 s of CPU
-    on a 4-core host, half of it PySpark re-reading its own zip) that
-    dwarfs the POSTs of a small micro-batch.  One ``http.client``
-    connection per partition (keep-alive reuse on HTTP/1.1 servers,
-    transparent reopen on HTTP/1.0) instead of a fresh TCP+TLS handshake
-    per row.  stdlib only: no extra deps on the workers."""
+    Not parallel, on purpose: Discord and Slack rate-limit each webhook
+    URL to a few POSTs per second, so concurrent senders to one URL buy
+    nothing.  The same rate bounds driver memory: a batch large enough
+    to strain the driver would take days to POST.  ``collect()`` runs
+    one job; ``toLocalIterator`` would run one per partition.
+
+    Delivery guarantee: no Spark task POSTs, so a task retry cannot
+    re-POST; but a ``foreachBatch`` replay after a failure re-POSTs the
+    whole batch, and a stale keep-alive reconnect can resend one
+    in-flight request — at-least-once per row.  Receivers must be
+    idempotent, or compose with ``effectively_once`` (its ledger skips
+    redelivered batches).  (The reference itself is fire-and-forget.)"""
 
     def send(payloads: DataFrame, destination: str) -> None:
         url = urls[destination]
+        rows = payloads.select("payload").collect()
+        parts = urlsplit(url)
+        conn_cls = (
+            http.client.HTTPSConnection
+            if parts.scheme == "https"
+            else http.client.HTTPConnection
+        )
+        path = parts.path or "/"
+        if parts.query:
+            path = f"{path}?{parts.query}"
 
-        def post_partition(rows) -> None:
-            import http.client
-            from urllib.parse import urlsplit
+        def connect():
+            return conn_cls(parts.hostname, parts.port, timeout=timeout)
 
-            parts = urlsplit(url)
-            conn_cls = (
-                http.client.HTTPSConnection
-                if parts.scheme == "https"
-                else http.client.HTTPConnection
-            )
-            path = parts.path or "/"
-            if parts.query:
-                path = f"{path}?{parts.query}"
-
-            def connect():
-                return conn_cls(parts.hostname, parts.port, timeout=timeout)
-
-            conn = connect()
-            reused = False  # has this connection already served a request?
-            try:
-                for row in rows:
-                    body = row["payload"].encode("utf-8")
-                    headers = {"Content-Type": "application/json"}
-                    # Narrowed retry (ADVICE r03 item 3).  Two retryable
-                    # cases only:
-                    #   (a) the SEND itself failed — the server cannot have
-                    #       processed a complete request, so resending is
-                    #       duplicate-free;
-                    #   (b) RemoteDisconnected on a REUSED keep-alive
-                    #       connection — the classic idle-close race where
-                    #       the server shut the socket before reading (the
-                    #       same case urllib3 retries); this is the one
-                    #       documented possible-duplicate window.
-                    # A response failure on a FRESH connection raises for
-                    # real: that is a server actively rejecting the request,
-                    # which the old blanket retry used to mask.
+        conn = connect()
+        reused = False  # has this connection already served a request?
+        try:
+            for row in rows:
+                body = row["payload"].encode("utf-8")
+                headers = {"Content-Type": "application/json"}
+                # Narrowed retry.  Two retryable cases only:
+                #   (a) the SEND itself failed — the server cannot have
+                #       processed a complete request, so resending is
+                #       duplicate-free;
+                #   (b) RemoteDisconnected on a REUSED keep-alive
+                #       connection — the classic idle-close race where
+                #       the server shut the socket before reading (the
+                #       same case urllib3 retries); this is the one
+                #       documented possible-duplicate window.
+                # A response failure on a FRESH connection raises for
+                # real: that is a server actively rejecting the request,
+                # which the old blanket retry used to mask.
+                try:
+                    conn.request("POST", path, body=body, headers=headers)
+                    sent = True
+                except (http.client.HTTPException, ConnectionError, BrokenPipeError):
+                    sent = False  # case (a): safe resend below
+                if sent:
                     try:
-                        conn.request("POST", path, body=body, headers=headers)
-                        sent = True
-                    except (
-                        http.client.HTTPException,
-                        ConnectionError,
-                        BrokenPipeError,
-                    ):
-                        sent = False  # case (a): safe resend below
-                    if sent:
-                        try:
-                            resp = conn.getresponse()
-                        except (
-                            http.client.RemoteDisconnected,
-                            ConnectionResetError,
-                        ):
-                            if not reused:
-                                raise  # fresh connection: a real rejection
-                            sent = False  # case (b): idle-close race
-                    if not sent:
-                        conn.close()
-                        conn = connect()
-                        conn.request("POST", path, body=body, headers=headers)
                         resp = conn.getresponse()
-                    resp.read()
-                    if resp.status >= 400:
-                        raise RuntimeError(
-                            f"webhook POST to {url} failed: HTTP {resp.status}"
-                        )
-                    if resp.will_close:
-                        # HTTP/1.0 server (or Connection: close): the socket
-                        # is dead; reopen proactively for the next row.
-                        conn.close()
-                        conn = connect()
-                        reused = False
-                    else:
-                        reused = True
-            finally:
-                conn.close()
-
-        payloads.foreachPartition(post_partition)
+                    except (http.client.RemoteDisconnected, ConnectionResetError):
+                        if not reused:
+                            raise  # fresh connection: a real rejection
+                        sent = False  # case (b): idle-close race
+                if not sent:
+                    conn.close()
+                    conn = connect()
+                    conn.request("POST", path, body=body, headers=headers)
+                    resp = conn.getresponse()
+                resp.read()
+                if resp.status >= 400:
+                    raise RuntimeError(
+                        f"webhook POST to {url} failed: HTTP {resp.status}"
+                    )
+                if resp.will_close:
+                    # HTTP/1.0 server (or Connection: close): the socket
+                    # is dead; reopen proactively for the next row.
+                    conn.close()
+                    conn = connect()
+                    reused = False
+                else:
+                    reused = True
+        finally:
+            conn.close()
 
     return send
 
@@ -271,11 +256,10 @@ def webhook_foreach_batch(
     destination (app.rb:211,236,264 fan-out), preserving per-key order
     within a batch.
 
-    The batch is computed once and cached (``_deliver_once``), then
-    delivered from ``defaultParallelism`` partitions, one per core: a
-    micro-batch runs one Python task per core and destination, not one
-    per shuffle partition, because a Python worker task has a fixed
-    CPU cost that outweighs the few hundred rows of a typical batch."""
+    The batch is computed and cached once (``_deliver_once``), then each
+    destination's payload projection goes to ``transport``; with
+    ``http_transport`` that is a driver-side collect and sequential
+    POSTs, so a micro-batch starts no Python worker task."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
         _deliver_once(batch, destinations, transport)

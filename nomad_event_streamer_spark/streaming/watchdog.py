@@ -52,10 +52,12 @@ class HeartbeatWatchdog(StreamingQueryListener):
 
 def supervise(spark, query, watchdog: HeartbeatWatchdog, poll_seconds: float = 1.0) -> int:
     """Driver-side supervisor loop: returns 0 on clean termination, 1 on
-    watchdog-triggered stop (the reference's exit 1, app.rb:99-102)."""
+    watchdog-triggered stop (the reference's exit 1, app.rb:99-102) or
+    when the query terminated with an error (e.g. a failed webhook POST
+    raised in ``foreachBatch``)."""
     while query.isActive:
         if watchdog.stalled():
             query.stop()
             return 1
         time.sleep(poll_seconds)
-    return 0
+    return 0 if query.exception() is None else 1

@@ -195,3 +195,22 @@ def test_watchdog_stall_detection():
     fq = FakeQuery()
     assert supervise(None, fq, wd, poll_seconds=0.05) == 1
     assert fq.stopped
+
+
+def test_supervise_reports_failed_query():
+    """A query that stopped on its own reads as a clean exit only if it
+    has no exception: a batch that raised (e.g. an HTTP 500 from a
+    webhook) must surface as exit 1, not 0."""
+    wd = HeartbeatWatchdog(threshold_seconds=60)
+
+    class StoppedQuery:
+        isActive = False
+
+        def __init__(self, error):
+            self.error = error
+
+        def exception(self):
+            return self.error
+
+    assert supervise(None, StoppedQuery(None), wd, poll_seconds=0.05) == 0
+    assert supervise(None, StoppedQuery(RuntimeError("HTTP 500")), wd, poll_seconds=0.05) == 1

@@ -2,11 +2,13 @@
 arrive at a live local server must be byte-identical to the oracled
 payload projections, for both Discord and Slack shapes."""
 
+import http.client
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from nomad_event_streamer_spark.sources.synthetic import sample_stream
+from nomad_event_streamer_spark.streaming.pipeline import task_event_pipeline
 from nomad_event_streamer_spark.streaming.runner import (
     build_stream,
     read_ndjson_stream,
@@ -77,10 +79,6 @@ def test_http_post_bodies_match_payload_projection(tmp_path, spark):
         # oracle: the same lines through the pure batch payload
         # projections (no duplicates in the fixture, so skipping the
         # streaming dedup is value-neutral)
-        from nomad_event_streamer_spark.streaming.pipeline import (
-            task_event_pipeline,
-        )
-
         batch = task_event_pipeline(spark.read.text(str(input_dir)))
         want_discord = {
             r["payload"].encode() for r in discord_payload(batch).collect()
@@ -164,6 +162,110 @@ def test_http_fresh_connection_close_raises_not_retries(tmp_path, spark):
         assert len(hits) == 1
     finally:
         srv.shutdown()
+
+
+def test_http_delivery_on_driver_in_order_over_one_connection(
+    tmp_path, spark, monkeypatch
+):
+    """``http_transport`` POSTs from the driver: each destination's share
+    of a micro-batch travels over one keep-alive connection, every task's
+    bodies arrive in (raft_index, event_time_ns) order, and every request
+    is made in this process (a POST from a Python worker process would
+    not pass through the wrapped ``request``)."""
+    lock = threading.Lock()
+    connections: list[int] = []  # one item per accepted TCP connection
+    received: list[tuple[int, str, bytes]] = []  # (connection, path, body)
+
+    class _KeepAlive(BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1"
+
+        def setup(self):
+            super().setup()
+            with lock:
+                self.conn_id = len(connections)
+                connections.append(self.conn_id)
+
+        def do_POST(self):  # noqa: N802
+            body = self.rfile.read(int(self.headers["Content-Length"]))
+            with lock:
+                received.append((self.conn_id, self.path, body))
+            self.send_response(204)
+            self.send_header("Content-Length", "0")
+            self.end_headers()
+
+        def log_message(self, *args):
+            pass
+
+    driver_requests = 0
+    request = http.client.HTTPConnection.request
+
+    def counting_request(self, *args, **kwargs):
+        nonlocal driver_requests
+        driver_requests += 1
+        return request(self, *args, **kwargs)
+
+    monkeypatch.setattr(http.client.HTTPConnection, "request", counting_request)
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), _KeepAlive)
+    srv.daemon_threads = True
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    base = http_transport(
+        {d: f"http://127.0.0.1:{srv.server_port}/{d}" for d in ("discord", "slack")}
+    )
+    calls: list[tuple[str, list]] = []  # (destination, requests it made)
+
+    def transport(payloads, destination):
+        with lock:
+            start = len(received)
+        base(payloads, destination)
+        with lock:
+            calls.append((destination, received[start:]))
+
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    (input_dir / "a.ndjson").write_text("\n".join(sample_stream(6)) + "\n")
+    try:
+        q = start_webhook_query(
+            build_stream(read_ndjson_stream(spark, str(input_dir))),
+            str(tmp_path / "ckpt"),
+            str(tmp_path / "out"),
+            transport=transport,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+    batch = task_event_pipeline(spark.read.text(str(input_dir)))
+    key_of: dict[str, dict[bytes, tuple]] = {}
+    for dest, shape in (("discord", discord_payload), ("slack", slack_payload)):
+        rows = shape(batch).collect()
+        key_of[dest] = {
+            r["payload"].encode(): (r["task_identifier"], r["raft_index"], r["event_time_ns"])
+            for r in rows
+        }
+        assert len(key_of[dest]) == len(rows) > 0  # a body names its event
+
+    delivering = [(dest, served) for dest, served in calls if served]
+    assert {dest for dest, _ in delivering} == {"discord", "slack"}
+    # one connection per destination and batch, reused for every POST
+    assert len(connections) == len(delivering)
+    assert driver_requests == len(received)
+    ordered_runs = 0
+    for dest, served in delivering:
+        assert len({conn for conn, _, _ in served}) == 1
+        assert {path for _, path, _ in served} == {f"/{dest}"}
+        per_task: dict[str, list] = {}
+        for _, _, body in served:
+            task, raft, ns = key_of[dest][body]
+            per_task.setdefault(task, []).append((raft, ns))
+        for seq in per_task.values():
+            assert seq == sorted(seq)
+            ordered_runs += len(seq) > 1
+    assert ordered_runs > 0
+    for dest, keys in key_of.items():
+        assert sorted(b for _, p, b in received if p == f"/{dest}") == sorted(keys)
 
 
 def test_batch_computed_once_and_delivered_per_core(tmp_path, spark):
