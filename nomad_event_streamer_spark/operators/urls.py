@@ -138,7 +138,7 @@ def canonicalize_sql(source_cte: str = "raw", carry: str = "doc_id, url") -> str
                CASE WHEN stripped = '' THEN '/' ELSE stripped END AS path,
                -- coalesce: DuckDB's array_to_string([]) is NULL where
                -- Spark's array_join([]) is '' — latent NULL-propagation
-               -- divergence found by scripts/fuzz_url.py (the registered
+               -- divergence found by scripts/fuzz_families/url.py (the registered
                -- corpus URLs always keep >= 2 params, so the hash gate
                -- alone never hits the empty-kept branch)
                coalesce(array_to_string(

@@ -1577,9 +1577,9 @@ def _tb_replay(
     maxk: int = _TB_MAX_K,
 ) -> DataFrame:
     """The q_token_bucket dataflow with the knobs exposed — the
-    registered query pins the declared literals; scripts/fuzz_bucket.py
+    registered query pins the declared literals; scripts/fuzz_families/bucket.py
     replays the REAL recurrence across the knob space (the
-    fuzz_ttl/_ttl_pipeline pattern).
+    ttl family's _ttl_pipeline pattern).
 
     Execution (optimization round 13): the recurrence runs as a JVM
     higher-order ``aggregate`` over each user's rank-capped, k-sorted
@@ -1591,7 +1591,7 @@ def _tb_replay(
     exact multiple of div before the double division, so the quotient
     is exact (never the float-rounding of a raw floor(a/b)).  Interleaved
     A/B at sf0.1: 0.185 (0.64 s vs 3.43 s) with identical-code controls
-    at 0.99/0.95; verdicts pinned by scripts/fuzz_bucket.py (3-way
+    at 0.99/0.95; verdicts pinned by scripts/fuzz_families/bucket.py (3-way
     differential across the knob space) and the unchanged 100-round CTE
     oracle."""
     from ..tables import events as events_tbl
@@ -2607,7 +2607,7 @@ _NP_BUCKET = 1000  # cents per prefix-sum bucket
         -- NULL values carry no rank/CDF mass: without the filter the
         -- NULL-cents GROUP enters the prefix sums where the engines
         -- order it differently (Spark NULLS FIRST vs DuckDB NULLS
-        -- LAST) -- found by scripts/fuzz_rankcdf.py's nulls family
+        -- LAST) -- found by scripts/fuzz_families/rankcdf.py's nulls family
         SELECT user_id % 2 AS v,
                CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS c
         FROM events WHERE value IS NOT NULL
@@ -2802,7 +2802,7 @@ def q_mann_whitney_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("u2_1"),
             "tie_sum",
             "d_num",
-            # one-variant guard (found by scripts/fuzz_rankcdf.py on its
+            # one-variant guard (found by scripts/fuzz_families/rankcdf.py on its
             # first run): with n0·n1 = 0, ANSI Spark raises DIVIDE_BY_ZERO
             # where DuckDB emits a value — both engines emit NULL instead
             # (the q_anova_f k>1 convention)
@@ -2827,7 +2827,7 @@ def q_mann_whitney_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         -- NULL values carry no rank/CDF mass: without the filter the
         -- NULL-cents GROUP enters the prefix sums where the engines
         -- order it differently (Spark NULLS FIRST vs DuckDB NULLS
-        -- LAST) -- found by scripts/fuzz_rankcdf.py's nulls family
+        -- LAST) -- found by scripts/fuzz_families/rankcdf.py's nulls family
         SELECT user_id % 2 AS v,
                CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS c
         FROM events WHERE value IS NOT NULL
@@ -2967,7 +2967,7 @@ def q_wasserstein1(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n0",
         "n1",
         "w1_num",
-        # one-variant guard (scripts/fuzz_rankcdf.py): n0·n1 = 0 raises
+        # one-variant guard (scripts/fuzz_families/rankcdf.py): n0·n1 = 0 raises
         # under ANSI where DuckDB answers — both sides emit NULL
         F.when(
             (F.col("n0") > 0) & (F.col("n1") > 0),

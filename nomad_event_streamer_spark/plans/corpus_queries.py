@@ -3975,7 +3975,7 @@ def q_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-for-byte on every composition, or the digest breaks — the
     strongest cross-implementation check available for a
     standards-defined transform (same posture as the DuckDB-native
-    ASOF JOIN referee, scripts/fuzz_asof.py).
+    ASOF JOIN referee, scripts/fuzz_families/asof.py).
 
     Scale: per-row Arrow batches, no shuffle — the scan-side
     canonicalization pass."""
@@ -4985,7 +4985,7 @@ def _suffix_lcp_pairs(spark: SparkSession, sf_dir: str):
     equality is real token equality inside both tails and its final
     ``least(lcp, tail_a, tail_b)`` cap clamps any padding overshoot,
     so walk-LCP == array-LCP exactly (referee: tests/test_round12_ops
-    TestSuffixReferee.test_maximal_repeat_lcp, plus fuzz_suffix.py)."""
+    TestSuffixReferee.test_maximal_repeat_lcp, plus fuzz_families/suffix.py)."""
     docs = rebalance_for_cpu(load(spark, sf_dir, "documents"))
     _suffix_guard(docs)
     suf = _suffix.suffix_arrays(docs, _SUFFIX_ROUNDS)

@@ -7152,8 +7152,8 @@ def _dbscan_oracle(
     g: int = _DB_G, mp: int = _DB_MINPTS, rounds: int = _DB_ROUNDS
 ) -> str:
     """Parameterized (cell width g, density floor mp) so
-    scripts/fuzz_dbscan.py can sweep the knob space against the REAL
-    dataflow (the fuzz_ttl pattern).  ``rounds`` sets the unroll depth:
+    scripts/fuzz_families/dbscan.py can sweep the knob space against the REAL
+    dataflow (the ttl fuzz family's pattern).  ``rounds`` sets the unroll depth:
     the registered query keeps 16 (committed hash evidence); the fuzz
     sweep passes 40 because fine-grid / low-floor knobs build deeper
     components than round 9 anticipated (g=15, mp=1 measured 19 —
@@ -7255,7 +7255,7 @@ def _dbscan_replay(
     max_rounds: int = _DB_ROUNDS,
 ) -> DataFrame:
     """The q_dbscan_grid dataflow with the knobs exposed — the
-    registered query pins the declared literals; scripts/fuzz_dbscan.py
+    registered query pins the declared literals; scripts/fuzz_families/dbscan.py
     replays the REAL pipeline across (g, mp) space."""
     vecs = load(spark, sf_dir, "embeddings")
     pts = vecs.select(

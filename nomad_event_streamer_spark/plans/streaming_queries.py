@@ -1121,7 +1121,7 @@ def _ttl_dedup_oracle(
     band-0 bucket in doc_id (= arrival) order, an arrival within TTL of
     the PREVIOUS arrival is a duplicate; a later one starts a new burst
     whose first doc is the keeper.  Parameterized over (ttl, spacing)
-    so scripts/fuzz_ttl.py can sweep the knob space the registered
+    so scripts/fuzz_families/ttl.py can sweep the knob space the registered
     literal oracle cannot reach."""
     if ttl_us is None:
         ttl_us = _TTL_US
@@ -1209,7 +1209,7 @@ def _ttl_pipeline(
 ) -> DataFrame:
     """The q_stream_dedup_ttl dataflow with the (ttl, spacing) knobs
     exposed — the registered query pins the declared literals;
-    scripts/fuzz_ttl.py replays the REAL streaming state machine across
+    scripts/fuzz_families/ttl.py replays the REAL streaming state machine across
     the knob space."""
     from ..operators import dedup
     from ..streaming.ttl_dedup import ttl_dedup_stream

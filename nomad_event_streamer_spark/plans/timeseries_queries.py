@@ -1811,8 +1811,8 @@ def _dtw_oracle(n: int = _DTW_N, w: int = _DTW_BAND) -> str:
     (diag), so each MATERIALIZED round computes one whole diagonal with
     NO within-round dependency — unlike a row unroll, whose left-cell
     dependency would force width*depth rounds.  Parameterized (profile
-    length n, band half-width w) so scripts/fuzz_dtw.py can sweep the
-    knob space against the REAL dataflow (the fuzz_ttl pattern)."""
+    length n, band half-width w) so scripts/fuzz_families/dtw.py can sweep the
+    knob space against the REAL dataflow (the ttl fuzz family's pattern)."""
     inf = _DTW_INF
     parts = [
         f"""WITH hrs AS (
@@ -1913,7 +1913,7 @@ def _dtw_replay(
 ) -> DataFrame:
     """The q_dtw_band dataflow with the knobs exposed (profile length
     n, band half-width w) — the registered query pins the declared
-    literals; scripts/fuzz_dtw.py replays the REAL DP across the knob
+    literals; scripts/fuzz_families/dtw.py replays the REAL DP across the knob
     space (the _tb_replay pattern)."""
     import pandas as pd
 

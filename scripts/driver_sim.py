@@ -7,7 +7,7 @@ With an output path, writes a machine-readable per-query result file
 (the DRIVER_SIM_r{N}.json artifact VERDICT r01 item 6 asks for).
 Set DRIVER_SIM_ONLY=slug1,slug2 to check a subset while iterating."""
 import json, os, sys, hashlib, datetime, decimal, math
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 import duckdb
 

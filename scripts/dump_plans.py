@@ -18,7 +18,7 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nomad_event_streamer_spark.plans import all_queries
 from nomad_event_streamer_spark.session import get_spark

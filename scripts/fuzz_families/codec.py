@@ -18,23 +18,17 @@ Mutations per seed: a byte flip (header- or body-region), a truncation,
 appended junk, a zeroed dim/length field, or a magic swap — plus
 unmutated seeds pinning roundtrip identity.
 
-Usage: python scripts/fuzz_codec.py [n_seeds] [out.json]
-Exit 0 iff every seed agrees (both-raise or identical-decode).
+A seed agrees iff both sides raise or both decode identically.
+
+Run: python scripts/fuzz.py codec [n_seeds] [out.json]
 """
 
 from __future__ import annotations
 
-import json
-import random
-import struct
-import sys
+from nomad_event_streamer_spark.operators import multimodal as mm
+from nomad_event_streamer_spark.operators import qoi as qoi_mod
 
-sys.path.insert(0, "/root/repo")
-
-import numpy as np  # noqa: E402
-
-from nomad_event_streamer_spark.operators import multimodal as mm  # noqa: E402
-from nomad_event_streamer_spark.operators import qoi as qoi_mod  # noqa: E402
+SEQUENTIAL_SEED = 0xC0DEC
 
 
 # ---------------------------------------------------------------------------
@@ -319,50 +313,23 @@ REF = {
 }
 
 
-def main() -> None:
-    n_seeds = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    out_path = sys.argv[2] if len(sys.argv) > 2 else None
-    rng = random.Random(0xC0DEC)
-    n_fail = 0
-    results = {}
-    by_fmt: dict[str, int] = {}
-    for seed in range(n_seeds):
-        fmt = rng.choice(["bmp", "pgm", "wav", "qoi"])
-        by_fmt[fmt] = by_fmt.get(fmt, 0) + 1
-        payload, kind = mutate(build(fmt, rng), fmt, rng)
-        try:
-            got = ("ok", REPO[fmt](payload))
-        except Exception:
-            got = ("raise", None)
-        try:
-            want = ("ok", REF[fmt](payload))
-        except Exception:
-            want = ("raise", None)
-        ok = got == want
-        if kind == "none" and got[0] != "ok":
-            ok = False  # unmutated container must decode
-        results[str(seed)] = {
-            "fmt": fmt,
-            "mutation": kind,
-            "repo": got[0],
-            "ref": want[0],
-            "status": "match" if ok else "MISMATCH",
-        }
-        if not ok:
-            n_fail += 1
-            print(f"seed {seed}: {fmt}/{kind} repo={got[0]} ref={want[0]} MISMATCH")
-    summary = {
-        "n_seeds": n_seeds,
-        "n_fail": n_fail,
-        "by_fmt": by_fmt,
-        "results": results,
-    }
-    if out_path:
-        with open(out_path, "w") as fh:
-            json.dump(summary, fh, indent=1)
-    print(f"FUZZ CODEC: {n_seeds - n_fail}/{n_seeds} match, {n_fail} failures")
-    sys.exit(1 if n_fail else 0)
+def case(rng, seed):
+    fmt = rng.choice(["bmp", "pgm", "wav", "qoi"])
+    payload, kind = mutate(build(fmt, rng), fmt, rng)
+    return {"fmt": fmt, "mutation": kind, "_payload": payload}
 
 
-if __name__ == "__main__":
-    main()
+def _decode(decoder, payload):
+    try:
+        return ("ok", decoder(payload))
+    except Exception:
+        return ("raise", None)
+
+
+def check(run, c):
+    got = _decode(REPO[c["fmt"]], c["_payload"])
+    want = _decode(REF[c["fmt"]], c["_payload"])
+    assert got == want, f"repo={got[0]} ref={want[0]}"
+    # an unmutated container must decode
+    assert c["mutation"] != "none" or got[0] == "ok", "unmutated payload raised"
+    return {"fmt": c["fmt"]}

@@ -20,23 +20,17 @@ Families, cycled per seed:
   weights; compares (n_feats, score) per doc — exercises the
   md5-int % K lambda path at Ks the fixed oracle never uses.
 
-Usage: python scripts/fuzz_curation.py [n_seeds] [out.json]
-Exit code 0 iff every seed matches across all three implementations.
+Run: python scripts/fuzz.py curation [n_seeds] [out.json]
 """
 
 from __future__ import annotations
 
 import hashlib
-import json
 import random
-import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql import SparkSession  # noqa: E402
-
 SF = "/root/testdata/sf0.001"
+SEED_BASE = 0
 
 
 def _tdiv(p: int, q: int) -> int:
@@ -300,105 +294,35 @@ def hng_py(texts: dict, p) -> dict:
     return out
 
 
-FAMILIES = [
+KINDS = [
     ("line_dedup", line_params, line_spark, line_sql, line_py),
     ("classifier", clf_params, clf_spark, clf_sql, clf_py),
     ("hashed_ngram", hng_params, hng_spark, hng_sql, hng_py),
 ]
 
 
-def run(n_seeds: int, out_path: str | None, stop: bool = True) -> int:
-    import duckdb
+def setup(run):
+    from nomad_event_streamer_spark.tables import load
 
-    from tests.oracle_compare import compare
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .appName("fuzz-curation")
-        .getOrCreate()
-    )
-    docs_df = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    docs_df = load(run.spark, SF, "documents").select("doc_id", "text")
     docs_df.persist().count()
-    texts = {
-        r["doc_id"]: r["text"]
-        for r in docs_df.collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS"
-        f" SELECT * FROM read_parquet('{SF}/documents.parquet')"
+    return docs_df, {r["doc_id"]: r["text"] for r in docs_df.collect()}
+
+
+def case(rng, seed):
+    kind, gen = KINDS[seed % len(KINDS)][:2]
+    return {"kind": kind, "params": gen(rng)}
+
+
+def check(run, c):
+    _, _, f_spark, f_sql, f_py = next(k for k in KINDS if k[0] == c["kind"])
+    docs_df, texts = run.state
+    p = c["params"]
+    cols, rows = run.compare(f_spark(run.spark, docs_df, p), f_sql(p))
+    got = {r[cols.index("doc_id")]: dict(zip(cols, r)) for r in rows}
+    expect = f_py(texts, p)
+    run.agree(
+        referee=expect,
+        spark={d: {k: got.get(d, {}).get(k) for k in e} for d, e in expect.items()},
     )
-
-    n_fail = 0
-    per_family: Counter = Counter()
-    detail: list[dict] = []
-    for seed in range(n_seeds):
-        name, gen, f_spark, f_sql, f_py = FAMILIES[seed % len(FAMILIES)]
-        rng = random.Random(seed)
-        p = gen(rng)
-        sdf = f_spark(spark, docs_df, p)
-        try:
-            compare(sdf, con, f_sql(p))
-        except AssertionError as exc:
-            n_fail += 1
-            detail.append(
-                {
-                    "seed": seed,
-                    "family": name,
-                    "stage": "spark_vs_duckdb",
-                    "params": {k: v for k, v in p.items() if k != "w"},
-                    "err": str(exc)[:300],
-                }
-            )
-            print(f"seed {seed} {name} spark-vs-duckdb FAIL: {str(exc)[:150]}")
-            continue
-        expect = f_py(texts, p)
-        got = {r["doc_id"]: r.asDict() for r in sdf.collect()}
-        mism = []
-        for doc_id, exp_row in expect.items():
-            for k, v in exp_row.items():
-                if got[doc_id][k] != v:
-                    mism.append((doc_id, k, got[doc_id][k], v))
-        if mism:
-            n_fail += 1
-            detail.append(
-                {
-                    "seed": seed,
-                    "family": name,
-                    "stage": "python_referee",
-                    "mismatch": [list(m) for m in mism[:5]],
-                }
-            )
-            print(f"seed {seed} {name} referee FAIL: {mism[:3]}")
-        per_family[name] += 1
-
-    summary = {
-        "n_seeds": n_seeds,
-        "n_fail": n_fail,
-        "per_family": dict(per_family),
-        "protocol": (
-            "three-way parametric: Spark Column pipeline vs DuckDB SQL "
-            "rendering (driver normalization) vs pure-Python referee "
-            "with explicit trunc-div, per seed; families line_dedup "
-            "(width/cap), classifier (weights/intercept/cap), "
-            "hashed_ngram (bucket count/weights)"
-        ),
-        "detail": detail,
-    }
-    if out_path:
-        with open(out_path, "w") as f:
-            json.dump(summary, f, indent=1)
-    print(f"curation fuzz: {n_seeds} seeds, {n_fail} fail")
-    if stop:
-        spark.stop()
-    return 1 if n_fail else 0
-
-
-if __name__ == "__main__":
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 60
-    out = sys.argv[2] if len(sys.argv) > 2 else None
-    raise SystemExit(run(n, out))
+    return {"kind": c["kind"]}

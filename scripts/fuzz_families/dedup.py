@@ -16,21 +16,13 @@ the universal-hash family at different K (parameter generation is a
 shared LCG — a drift there shifts every signature), and the skew-cap
 filter's bucket-size boundary.
 
-Usage: python scripts/fuzz_dedup.py [n_seeds] [out.json]
-Exit 0 iff every configuration matches.
+Run: python scripts/fuzz.py dedup [n_seeds] [out.json]
 """
 
 from __future__ import annotations
 
-import json
-import random
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-import duckdb  # noqa: E402
-
 SF = "/root/testdata/sf0.01"
+SEED_BASE = 0
 
 
 def shingle_cte(n: int) -> str:
@@ -93,82 +85,28 @@ def oracle_sql(n: int, num_hashes: int, rows_per_band: int,
     )
 
 
-def run_config(spark, con, n, num_hashes, rows_per_band, max_bucket):
+def spark_pairs(spark, n, num_hashes, rows_per_band, max_bucket) -> set:
     from nomad_event_streamer_spark.operators import dedup
     from nomad_event_streamer_spark.tables import load
 
-    docs = load(spark, SF, "documents")
-    sh = dedup.shingles(docs, n=n)
+    sh = dedup.shingles(load(spark, SF, "documents"), n=n)
     sig = dedup.minhash_signatures(sh, num_hashes=num_hashes)
-    bands = dedup.lsh_bands(
-        sig, num_hashes=num_hashes, rows_per_band=rows_per_band
-    )
+    bands = dedup.lsh_bands(sig, num_hashes=num_hashes, rows_per_band=rows_per_band)
     pairs = dedup.lsh_candidate_pairs(bands, max_bucket=max_bucket)
-    spark_set = {
-        (r["doc_a"], r["doc_b"]) for r in pairs.collect()
-    }
-    duck_set = {
-        (a, b)
-        for a, b in con.execute(
-            oracle_sql(n, num_hashes, rows_per_band, max_bucket)
-        ).fetchall()
-    }
-    return spark_set, duck_set
+    return {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
 
 
-def main() -> int:
-    n_seeds = int(sys.argv[1]) if len(sys.argv) > 1 else 40
-    out_path = sys.argv[2] if len(sys.argv) > 2 else None
-    from nomad_event_streamer_spark.session import get_spark
+def case(rng, seed):
+    n = rng.choice([2, 3, 3, 4])
+    num_hashes = rng.choice([8, 12, 16, 24])
+    rpb = rng.choice([r for r in (1, 2, 3, 4) if num_hashes % r == 0])
+    max_bucket = rng.choice([None, None, 8, 32])
+    return {"n": n, "num_hashes": num_hashes, "rows_per_band": rpb, "max_bucket": max_bucket}
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{SF}/documents.parquet')"
+
+def check(run, c):
+    knobs = (c["n"], c["num_hashes"], c["rows_per_band"], c["max_bucket"])
+    run.agree(
+        spark=spark_pairs(run.spark, *knobs),
+        duckdb={tuple(r) for r in run.duck(oracle_sql(*knobs))},
     )
-    results = {}
-    n_fail = 0
-    for seed in range(n_seeds):
-        rng = random.Random(seed)
-        n = rng.choice([2, 3, 3, 4])
-        num_hashes = rng.choice([8, 12, 16, 24])
-        rpb = rng.choice(
-            [r for r in (1, 2, 3, 4) if num_hashes % r == 0]
-        )
-        max_bucket = rng.choice([None, None, 8, 32])
-        s, d = run_config(spark, con, n, num_hashes, rpb, max_bucket)
-        ok = s == d
-        if not ok:
-            n_fail += 1
-            print(
-                f"seed {seed}: MISMATCH n={n} K={num_hashes} r={rpb} "
-                f"cap={max_bucket} spark_only={sorted(s - d)[:5]} "
-                f"duck_only={sorted(d - s)[:5]}"
-            )
-        results[str(seed)] = {
-            "status": "match" if ok else "mismatch",
-            "n": n,
-            "num_hashes": num_hashes,
-            "rows_per_band": rpb,
-            "max_bucket": max_bucket,
-            "n_pairs": len(s),
-        }
-        if (seed + 1) % 10 == 0:
-            print(f"  {seed + 1}/{n_seeds} configs, {n_fail} failures")
-    summary = {
-        "family": "dedup_param",
-        "n_seeds": n_seeds,
-        "n_fail": n_fail,
-        "sf_dir": SF,
-        "results": results,
-    }
-    if out_path:
-        with open(out_path, "w") as fh:
-            json.dump(summary, fh, indent=1)
-    print(f"DEDUP PARAM FUZZ: {n_seeds - n_fail}/{n_seeds} match, {n_fail} failures")
-    return 1 if n_fail else 0
-
-
-if __name__ == "__main__":
-    sys.exit(main())

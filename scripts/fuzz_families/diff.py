@@ -6,7 +6,7 @@ random filter / aggregate / join / window / rollup / window-over-agg
 queries over ``events`` / ``lineitem`` (+``orders``, +``customer`` for
 the 3-table chain) from a bounded grammar, renders each query BOTH
 as a PySpark DataFrame program (through the engine's own ``tables.load``
-path, on a plain driver-style SparkSession) and as DuckDB SQL, and
+path) and as DuckDB SQL, and
 hash-compares the results with the same normalization the verification
 driver uses.
 
@@ -16,24 +16,19 @@ arithmetic), so a mismatch is an engine-semantics or loader bug, never
 float noise.  Magnitudes are bounded by construction (atom ``hi`` bounds,
 no atom*atom products) so Spark's ANSI overflow never fires.
 
-Usage: python scripts/fuzz_diff.py [n_seeds] [out.json]
-Exit code 0 iff every seed matches.
+Run: python scripts/fuzz.py diff [n_seeds] [out.json]
 """
 
 from __future__ import annotations
 
-import json
-import random
-import sys
 from dataclasses import dataclass
 from typing import Callable
 
-sys.path.insert(0, "/root/repo")
-
-import pyspark.sql.functions as F  # noqa: E402
-from pyspark.sql import Column, DataFrame, SparkSession, Window  # noqa: E402
+import pyspark.sql.functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 SF = "/root/testdata/sf0.01"
+SEED_BASE = 0
 
 
 # ---------------------------------------------------------------------------
@@ -202,12 +197,10 @@ class Gen:
 
     MAX_HI = 5e11  # keeps sum() over ~1e6 rows far from int64 edge
 
-    def __init__(self, seed: int, str_values: dict[str, list[str]]):
-        self.rng = random.Random(seed)
-        self.seed = seed
+    def __init__(self, rng):
+        self.rng = rng
         self.table = self.rng.choice(["events", "lineitem", "join", "join3"])
         self.atoms = INT_ATOMS[self.table]()
-        self.str_values = str_values
         self.shape = self.rng.choice(
             [
                 "project",
@@ -411,7 +404,10 @@ class Gen:
 
     # -- query shapes -------------------------------------------------------
 
-    def build(self, spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
+    def build(
+        self, spark: SparkSession, sf_dir: str, str_values: dict[str, list[str]]
+    ) -> tuple[DataFrame, str]:
+        self.str_values = str_values
         where = self.pred()
         base = self._spark_base(spark, sf_dir).where(where.col)
         uniq = UNIQUE_KEYS[self.table]
@@ -790,84 +786,16 @@ def str_value_pool(con) -> dict[str, list[str]]:
     return pool
 
 
-def run(n_seeds: int, out_path: str | None, sf_dir: str = SF) -> int:
-    from tests.oracle_compare import compare, duckdb_connection
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .appName("fuzz-diff")
-        .getOrCreate()
-    )
-    con = duckdb_connection(sf_dir)
-    pool = str_value_pool(con)
-
-    results = {}
-    n_fail = 0
-    for seed in range(n_seeds):
-        gen = Gen(seed, pool)
-        try:
-            df, sql = gen.build(spark, sf_dir)
-            compare(df, con, sql)
-            results[seed] = {
-                "status": "match",
-                "table": gen.table,
-                "shape": gen.shape,
-            }
-        except AssertionError as exc:
-            n_fail += 1
-            results[seed] = {
-                "status": "MISMATCH",
-                "table": gen.table,
-                "shape": gen.shape,
-                "sql": sql,
-                "err": str(exc)[:500],
-            }
-            print(f"seed {seed}: MISMATCH {str(exc)[:200]}")
-        except Exception as exc:  # generation/engine error = a finding too
-            n_fail += 1
-            results[seed] = {
-                "status": "ERROR",
-                "table": gen.table,
-                "shape": gen.shape,
-                "err": f"{type(exc).__name__}: {str(exc)[:500]}",
-            }
-            print(f"seed {seed}: ERROR {type(exc).__name__}: {str(exc)[:200]}")
-        if (seed + 1) % 25 == 0:
-            print(f"  {seed + 1}/{n_seeds} seeds, {n_fail} failures")
-
-    summary = {
-        "n_seeds": n_seeds,
-        "n_fail": n_fail,
-        "sf_dir": sf_dir,
-        "by_shape": {
-            s: sum(1 for r in results.values() if r["shape"] == s)
-            for s in (
-                "project",
-                "agg",
-                "window",
-                "setop",
-                "rollup",
-                "aggwindow",
-                "subquery",
-                "outeragg",
-            )
-        },
-        "by_table": {
-            t: sum(1 for r in results.values() if r["table"] == t)
-            for t in ("events", "lineitem", "join", "join3", "fulljoin")
-        },
-        "results": results,
-    }
-    if out_path:
-        with open(out_path, "w") as f:
-            json.dump(summary, f, indent=1)
-    print(f"FUZZ DIFF: {n_seeds - n_fail}/{n_seeds} match, {n_fail} failures")
-    return 1 if n_fail else 0
+def setup(run):
+    return str_value_pool(run.con)
 
 
-if __name__ == "__main__":
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 200
-    out = sys.argv[2] if len(sys.argv) > 2 else None
-    sys.exit(run(n, out))
+def case(rng, seed):
+    gen = Gen(rng)
+    return {"table": gen.table, "shape": gen.shape, "_gen": gen}
+
+
+def check(run, case):
+    df, case["sql"] = case["_gen"].build(run.spark, SF, run.state)
+    run.compare(df, case["sql"])
+    return {"shape": case["shape"], "table": case["table"]}

@@ -2,7 +2,7 @@
 item #4): q_link_predict, q_link_predict_capped, q_adamic_adar,
 q_adamic_adar_capped, q_clustering_coeff across random graph SHAPES and
 the p90-cap tie boundaries the fixed sf fixtures never produce — THREE
-independent implementations per seed (the fuzz_rankcdf pattern):
+independent implementations per seed (the rankcdf family's pattern):
 
 1. the REAL registered queries, run against a synthesized events table
    (cell equi-join edge builders, exact-rank p90 caps, wedge joins),
@@ -28,30 +28,29 @@ q_kcore is deliberately out of scope: it rides the documents LSH graph
 (plans/llm_ops.py), whose inputs the dedup fuzz family already varies;
 this family owns the EVENTS-derived co-activity graphs.
 
-Usage: python scripts/fuzz_graph.py [n_seeds] [out.json]
-Exit 0 iff every seed matches Spark == DuckDB (driver normalization)
-and both match the referee row-for-row.
+A seed passes iff, for every query, Spark == DuckDB (driver
+normalization) and both match the referee row-for-row.
+
+Run: python scripts/fuzz.py graph [n_seeds] [out.json]
 """
 
 from __future__ import annotations
 
-import json
-import math
-import os
 import random
-import shutil
-import sys
-import tempfile
 from collections import Counter, defaultdict
 
-sys.path.insert(0, "/root/repo")
-
-import duckdb  # noqa: E402
-import pandas as pd  # noqa: E402
-
 SF = "/root/testdata/sf0.001"
+SEED_BASE = 9900
 MIN_CELLS = 3
 TOPK = 20
+SLUGS = (
+    "q_link_predict",
+    "q_link_predict_capped",
+    "q_adamic_adar",
+    "q_adamic_adar_capped",
+    "q_clustering_coeff",
+)
+KINDS = ["hub", "path", "all_tie", "sparse", "cliques", "dense"]
 
 
 # ---------------------------------------------------------------------------
@@ -243,157 +242,34 @@ def synth(rng: random.Random, family: str) -> set:
     return cells
 
 
-def make_sf_dir(base: str, cells: set) -> str:
-    tmpl = pd.read_parquet(f"{SF}/events.parquet")
+def case(rng, seed):
+    kind = KINDS[seed % len(KINDS)]
+    cells = synth(rng, kind)
+    return {"kind": kind, "n_cells": len(cells), "_cells": cells}
+
+
+def events_table(run, cells: set):
+    import pandas as pd
+
     rows = sorted(cells)
-    n = max(len(rows), 1)
-    reps = max(1, -(-n // len(tmpl)))
-    ev = pd.concat([tmpl] * reps, ignore_index=True).iloc[:n].copy()
-    if rows:
-        ev["user_id"] = [u for u, _, _ in rows]
-        ev["event_type"] = [e for _, e, _ in rows]
-        ev["ts"] = pd.to_datetime(
-            [h * 3600_000_000 for _, _, h in rows], unit="us"
-        )
-        ev["event_id"] = range(len(rows))
-    else:
-        ev = ev.iloc[:0]
-    d = os.path.join(base, "sf_synth")
-    os.makedirs(d, exist_ok=True)
-    for name in os.listdir(SF):
-        dst = os.path.join(d, name)
-        if not os.path.exists(dst):
-            os.symlink(os.path.join(SF, name), dst)
-    evp = os.path.join(d, "events.parquet")
-    if os.path.islink(evp):
-        os.unlink(evp)
-    ev.to_parquet(evp, index=False)
-    return d
+    ev = run.template("events", max(len(rows), 1))
+    if not rows:
+        return ev.iloc[:0]
+    ev["user_id"] = [u for u, _, _ in rows]
+    ev["event_type"] = [e for _, e, _ in rows]
+    ev["ts"] = pd.to_datetime([h * 3600_000_000 for _, _, h in rows], unit="us")
+    ev["event_id"] = range(len(rows))
+    return ev
 
 
-# ---------------------------------------------------------------------------
-# driver-normalized compare (inlined from the tests/oracle_compare
-# contract so this script runs without the tests tree)
-# ---------------------------------------------------------------------------
-
-
-def norm_rows(cols, rows):
-    import decimal
-
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def cell(v):
-        if v is None:
-            return None
-        if isinstance(v, decimal.Decimal):
-            return repr(float(v))
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        return v
-
-    return sorted((tuple(cell(r[i]) for i in order) for r in rows), key=repr)
-
-
-SLUGS = (
-    "q_link_predict",
-    "q_link_predict_capped",
-    "q_adamic_adar",
-    "q_adamic_adar_capped",
-    "q_clustering_coeff",
-)
-
-
-def main() -> None:
-    n_seeds = int(sys.argv[1]) if len(sys.argv) > 1 else 30
-    out_path = sys.argv[2] if len(sys.argv) > 2 else None
-
-    from pyspark.sql import SparkSession
-
+def check(run, c):
     from nomad_event_streamer_spark.plans import ORACLES, QUERIES
-    from nomad_event_streamer_spark.session import ensure_runtime_confs
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    ensure_runtime_confs(spark)
-
-    families = ["hub", "path", "all_tie", "sparse", "cliques", "dense"]
-    failures: list[dict] = []
-    for seed in range(n_seeds):
-        rng = random.Random(9900 + seed)
-        family = families[seed % len(families)]
-        cells = synth(rng, family)
-        ref = referee(cells)
-        base = tempfile.mkdtemp(prefix="nes_graph_")
-        try:
-            sf_dir = make_sf_dir(base, cells)
-            con = duckdb.connect()
-            for name in (
-                "region nation customer supplier part orders lineitem "
-                "events documents embeddings"
-            ).split():
-                con.execute(
-                    f"CREATE VIEW {name} AS SELECT * FROM "
-                    f"read_parquet('{sf_dir}/{name}.parquet')"
-                )
-            for slug in SLUGS:
-                sdf = QUERIES[slug](spark, sf_dir)
-                scols = sdf.columns
-                srows = [tuple(r) for r in sdf.collect()]
-                tbl = con.execute(ORACLES[slug]).fetch_arrow_table()
-                dcols = tbl.column_names
-                drows = list(zip(*[c.to_pylist() for c in tbl.columns]))
-                rcols = list(REFEREE_COLS[slug])
-                rrows = ref[slug]
-                ok = (
-                    sorted(scols) == sorted(dcols)
-                    and len(srows) == len(drows) == len(rrows)
-                    and norm_rows(scols, srows)
-                    == norm_rows(dcols, drows)
-                    == norm_rows(rcols, rrows)
-                )
-                if not ok:
-                    failures.append(
-                        {
-                            "seed": seed,
-                            "family": family,
-                            "slug": slug,
-                            "n_cells": len(cells),
-                            "spark": srows[:5],
-                            "duck": drows[:5],
-                            "referee": rrows[:5],
-                        }
-                    )
-            con.close()
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
-        if (seed + 1) % 10 == 0:
-            print(f"  {seed + 1}/{n_seeds} seeds, {len(failures)} failures")
-
-    print(
-        f"FUZZ GRAPH: {n_seeds - len(set(f['seed'] for f in failures))}"
-        f"/{n_seeds} match, {len(failures)} failures"
-    )
-    if out_path:
-        with open(out_path, "w", encoding="utf-8") as fh:
-            json.dump(
-                {
-                    "n_seeds": n_seeds,
-                    "slugs": list(SLUGS),
-                    "families": families,
-                    "n_failures": len(failures),
-                    "failures": failures[:20],
-                },
-                fh,
-                indent=1,
-                default=str,
-            )
-    spark.stop()
-    sys.exit(1 if failures else 0)
-
-
-if __name__ == "__main__":
-    main()
+    ref = referee(c["_cells"])
+    sf_dir, con = run.synth(events=events_table(run, c["_cells"]))
+    for slug in SLUGS:
+        c["slug"] = slug
+        result = run.compare(QUERIES[slug](run.spark, sf_dir), ORACLES[slug], con)
+        run.same(result, (REFEREE_COLS[slug], ref[slug]), ("spark", "referee"))
+    del c["slug"]
+    return {"kind": c["kind"]}

@@ -13,21 +13,13 @@ null-fold), never float noise.  Slice clamping, empty-after-filter
 reductions, and sort-then-head are exactly the edges the fixed
 q_hof_reduce oracle cannot sweep.
 
-Usage: python scripts/fuzz_hof.py [n_seeds] [out.json]
-Exit code 0 iff every seed matches.
+Run: python scripts/fuzz.py hof [n_seeds] [out.json]
 """
 
 from __future__ import annotations
 
-import json
-import random
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql import SparkSession  # noqa: E402
-
 SF = "/root/testdata/sf0.01"
+SEED_BASE = 0
 
 _QV_SPARK = (
     "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5)"
@@ -39,9 +31,8 @@ _QV_DUCK = (
 )
 
 
-def gen_chain(seed: int) -> tuple[str, str, str]:
+def gen_chain(rng) -> tuple[str, str, str]:
     """Return (shape_label, spark_expr, duck_expr) over alias V."""
-    rng = random.Random(seed)
     sp, dk = _QV_SPARK, _QV_DUCK
     labels = []
     for _ in range(rng.randint(1, 3)):
@@ -106,84 +97,23 @@ def gen_chain(seed: int) -> tuple[str, str, str]:
     return "+".join(labels), sp, dk
 
 
-def run(n_seeds: int, out_path: str | None, sf_dir: str = SF) -> int:
-    from tests.oracle_compare import compare, duckdb_connection
+def setup(run):
+    from nomad_event_streamer_spark.tables import load
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .appName("fuzz-hof")
-        .getOrCreate()
-    )
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").createOrReplaceTempView(
-        "embeddings"
-    )
-    con = duckdb_connection(sf_dir)
+    load(run.spark, SF, "embeddings").createOrReplaceTempView("embeddings")
 
-    results: dict[int, dict] = {}
-    by_red: dict[str, int] = {}
-    n_fail = 0
-    for seed in range(n_seeds):
-        label, sp, dk = gen_chain(seed)
-        red = label.rsplit("+", 1)[-1]
-        by_red[red] = by_red.get(red, 0) + 1
-        sq = (
-            f"SELECT vec_id, CAST({sp} AS BIGINT) AS r "
-            "FROM embeddings WHERE vec_id < 300"
-        )
-        dq = (
-            f"SELECT vec_id, CAST({dk} AS BIGINT) AS r "
-            "FROM embeddings WHERE vec_id < 300"
-        )
-        try:
-            compare(spark.sql(sq), con, dq)
-            results[seed] = {"status": "match", "chain": label}
-        except AssertionError as exc:
-            n_fail += 1
-            results[seed] = {
-                "status": "FAIL",
-                "chain": label,
-                "detail": str(exc)[:400],
-                "spark_sql": sq,
-                "duck_sql": dq,
-            }
-            print(f"seed {seed} ({label}) FAIL: {str(exc)[:200]}")
-        except Exception as exc:  # noqa: BLE001
-            n_fail += 1
-            results[seed] = {
-                "status": "ERROR",
-                "chain": label,
-                "detail": str(exc)[:400],
-                "spark_sql": sq,
-                "duck_sql": dq,
-            }
-            print(f"seed {seed} ({label}) ERROR: {str(exc)[:200]}")
-        if (seed + 1) % 50 == 0:
-            print(f"  {seed + 1}/{n_seeds} done, {n_fail} fail")
-    summary = {
-        "n_seeds": n_seeds,
-        "n_fail": n_fail,
-        "sf_dir": sf_dir,
-        "protocol": (
-            "dual-rendered HOF chains (1-3 lambda ops + 1 reduction) "
-            "over milli-quantized embedding arrays: Spark transform/"
-            "filter/reverse/slice/array_sort/aggregate/exists vs DuckDB "
-            "list_transform/list_filter/list_reverse/[1:k]/list_sort/"
-            "list_aggregate; integer-exact end to end"
-        ),
-        "by_reduction": by_red,
-        "results": results,
+
+def case(rng, seed):
+    chain, sp, dk = gen_chain(rng)
+    return {
+        "chain": chain,
+        "spark_sql": f"SELECT vec_id, CAST({sp} AS BIGINT) AS r "
+        "FROM embeddings WHERE vec_id < 300",
+        "duck_sql": f"SELECT vec_id, CAST({dk} AS BIGINT) AS r "
+        "FROM embeddings WHERE vec_id < 300",
     }
-    if out_path:
-        with open(out_path, "w") as f:
-            json.dump(summary, f, indent=1)
-    print(f"hof fuzz: {n_seeds} seeds, {n_fail} fail")
-    spark.stop()
-    return 1 if n_fail else 0
 
 
-if __name__ == "__main__":
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    out = sys.argv[2] if len(sys.argv) > 2 else None
-    raise SystemExit(run(n, out))
+def check(run, c):
+    run.compare(run.spark.sql(c["spark_sql"]), c["duck_sql"])
+    return {"reduction": c["chain"].rsplit("+", 1)[-1]}

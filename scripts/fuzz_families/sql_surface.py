@@ -1,7 +1,7 @@
 """Differential fuzz for the round-7 SQL-surface family: recursive
 CTEs, LATERAL correlated top-k, and null-safe joins.
 
-Unlike fuzz_diff.py (dual-rendered DataFrame-vs-SQL), every seed here
+Unlike the diff family (dual-rendered DataFrame-vs-SQL), every seed here
 builds ONE SQL string and runs the IDENTICAL text on Spark 4's SQL
 front end and on DuckDB — the strongest possible differential, since
 there is no per-engine rendering step to share a bug with.  Spark temp
@@ -27,21 +27,14 @@ Shapes (seeded random):
 All outputs are BIGINT/strings (cents quantization for prices), so a
 mismatch is an engine-semantics bug, never float noise.
 
-Usage: python scripts/fuzz_sql_surface.py [n_seeds] [out.json]
-Exit code 0 iff every seed matches.
+Run: python scripts/fuzz.py sql_surface [n_seeds] [out.json]
 """
 
 from __future__ import annotations
 
-import json
-import random
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql import SparkSession  # noqa: E402
-
 SF = "/root/testdata/sf0.01"
+SEED_BASE = 0
+TABLES = ("nation", "customer", "supplier", "orders", "lineitem")
 
 _EDGES_SQL = """
     SELECT DISTINCT sn.n_name AS src, cn.n_name AS dst
@@ -54,9 +47,8 @@ _EDGES_SQL = """
 """
 
 
-def gen_sql(seed: int) -> tuple[str, str]:
-    """Return (shape, sql) for this seed."""
-    rng = random.Random(seed)
+def gen_sql(rng) -> tuple[str, str]:
+    """Return (shape, sql) for one seed."""
     shape = rng.choice(
         [
             "recursive_graph",
@@ -193,84 +185,22 @@ def gen_sql(seed: int) -> tuple[str, str]:
     return shape, sql
 
 
-def run(n_seeds: int, out_path: str | None, sf_dir: str = SF) -> int:
-    from tests.oracle_compare import compare, duckdb_connection
+def setup(run):
+    from nomad_event_streamer_spark.tables import load
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .appName("fuzz-sql-surface")
-        .getOrCreate()
-    )
-    for t in (
-        "nation",
-        "customer",
-        "supplier",
-        "orders",
-        "lineitem",
-    ):
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-    con = duckdb_connection(sf_dir)
+    for t in TABLES:
+        load(run.spark, SF, t).createOrReplaceTempView(t)
     # Materialize the trade graph once per engine; the recursion itself
     # is then instant per seed (25-node graph).
-    spark.sql(f"CACHE TABLE trade_edges AS {_EDGES_SQL}")
-    con.execute(f"CREATE TABLE trade_edges AS {_EDGES_SQL}")
-
-    results: dict[int, dict] = {}
-    by_shape: dict[str, int] = {}
-    n_fail = 0
-    for seed in range(n_seeds):
-        shape, sql = gen_sql(seed)
-        by_shape[shape] = by_shape.get(shape, 0) + 1
-        try:
-            compare(spark.sql(sql), con, sql)
-            results[seed] = {"status": "match", "shape": shape}
-        except AssertionError as exc:
-            n_fail += 1
-            results[seed] = {
-                "status": "FAIL",
-                "shape": shape,
-                "detail": str(exc)[:400],
-                "sql": sql,
-            }
-            print(f"seed {seed} ({shape}) FAIL: {str(exc)[:200]}")
-        except Exception as exc:  # noqa: BLE001
-            n_fail += 1
-            results[seed] = {
-                "status": "ERROR",
-                "shape": shape,
-                "detail": str(exc)[:400],
-                "sql": sql,
-            }
-            print(f"seed {seed} ({shape}) ERROR: {str(exc)[:200]}")
-        if (seed + 1) % 25 == 0:
-            print(f"  {seed + 1}/{n_seeds} done, {n_fail} fail")
-    summary = {
-        "n_seeds": n_seeds,
-        "n_fail": n_fail,
-        "sf_dir": sf_dir,
-        "protocol": (
-            "IDENTICAL SQL text on Spark 4 and DuckDB (no per-engine "
-            "rendering): recursive CTE over the nation trade graph "
-            "(random seeds/bound/direction) + recursive arithmetic "
-            "series (5-120 steps) + LATERAL top-k (random "
-            "segment/k<=5/order) + correlated LATERAL aggregate "
-            "(random segment/aggregate/date bound) + "
-            "IS NOT DISTINCT FROM join (random modulus/fold)"
-        ),
-        "by_shape": by_shape,
-        "results": results,
-    }
-    if out_path:
-        with open(out_path, "w") as f:
-            json.dump(summary, f, indent=1)
-    print(f"sql_surface fuzz: {n_seeds} seeds, {n_fail} fail")
-    spark.stop()
-    return 1 if n_fail else 0
+    run.spark.sql(f"CACHE TABLE trade_edges AS {_EDGES_SQL}")
+    run.con.execute(f"CREATE TABLE trade_edges AS {_EDGES_SQL}")
 
 
-if __name__ == "__main__":
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    out = sys.argv[2] if len(sys.argv) > 2 else None
-    raise SystemExit(run(n, out))
+def case(rng, seed):
+    shape, sql = gen_sql(rng)
+    return {"shape": shape, "sql": sql}
+
+
+def check(run, c):
+    run.compare(run.spark.sql(c["sql"]), c["sql"])
+    return {"shape": c["shape"]}

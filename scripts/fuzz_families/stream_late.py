@@ -20,27 +20,22 @@ batch files the stream reads (no cross-engine hash replication needed —
 the assignment itself is the random variable), so a mismatch means the
 pinned protocol is wrong for that ordering, not float noise.
 
-Usage: python scripts/fuzz_stream_late.py [n_seeds] [out.json]
-Exit 0 iff every seed matches.
+Run: python scripts/fuzz.py stream_late [n_seeds] [out.json]
 """
 
 from __future__ import annotations
 
 import glob
-import json
 import os
-import random
 import shutil
-import sys
 import tempfile
 import uuid
 
-sys.path.insert(0, "/root/repo")
-
-import pyspark.sql.functions as F  # noqa: E402
-from pyspark.sql import SparkSession  # noqa: E402
+import pyspark.sql.functions as F
+from pyspark.sql import SparkSession
 
 SF = "/root/testdata/sf0.001"
+SEED_BASE = 0
 HOUR_US = 3_600_000_000
 
 
@@ -133,86 +128,68 @@ def _actual(spark: SparkSession, d: str, delay_us: int,
         .agg(F.count(F.lit(1)).alias("n"))
     )
     name = f"latefuzz_{uuid.uuid4().hex[:12]}"
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="nes_latefuzz_ckpt_"), "cp")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(name).select(
-        F.unix_micros(F.col("window.start")).alias("ws"), "n"
-    )
-    return {r["ws"]: r["n"] for r in out.collect()}
+    ckpt = tempfile.mkdtemp(prefix="nes_latefuzz_ckpt_")
+    try:
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", os.path.join(ckpt, "cp"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        out = spark.table(name).select(
+            F.unix_micros(F.col("window.start")).alias("ws"), "n"
+        )
+        return {r["ws"]: r["n"] for r in out.collect()}
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def main() -> int:
-    n_seeds = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    out_path = sys.argv[2] if len(sys.argv) > 2 else None
-    from nomad_event_streamer_spark.session import get_spark
+def setup(run):
+    return _load_events(run.spark)
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
-    rows = _load_events(spark)
-    results = {}
-    n_fail = 0
-    for seed in range(n_seeds):
-        rng = random.Random(seed)
-        n_batches = rng.choice([2, 3, 3, 4])
-        delay_us = rng.choice([5, 10, 10, 20]) * 60_000_000
-        win_us = rng.choice([30, 60, 60, 120]) * 60_000_000
-        # weighted assignment, sometimes leaving a batch empty
-        weights = [rng.random() + 0.05 for _ in range(n_batches)]
-        if n_batches >= 3 and rng.random() < 0.2:
-            weights[rng.randrange(n_batches)] = 0.0  # engineered empty batch
-        tot = sum(weights)
-        cum, acc = [], 0.0
-        for w in weights:
-            acc += w / tot
-            cum.append(acc)
-        assignment = {}
-        for e, _u, _t in rows:
-            x = rng.random()
-            assignment[e] = next(i for i, c in enumerate(cum) if x <= c)
-        d = _write_batches(spark, rows, assignment, n_batches)
-        try:
-            exp = _expected(rows, assignment, n_batches, delay_us, win_us)
-            act = _actual(spark, d, delay_us, win_us)
-            ok = exp == act
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-        if not ok:
-            n_fail += 1
-            only_exp = {k: v for k, v in exp.items() if act.get(k) != v}
-            only_act = {k: v for k, v in act.items() if exp.get(k) != v}
-            print(
-                f"seed {seed}: MISMATCH B={n_batches} delay={delay_us}"
-                f" win={win_us} exp_diff={only_exp} act_diff={only_act}"
-            )
-        results[str(seed)] = {
-            "status": "match" if ok else "mismatch",
-            "n_batches": n_batches,
-            "delay_min": delay_us // 60_000_000,
-            "window_min": win_us // 60_000_000,
-            "n_windows": len(exp),
-        }
-        if (seed + 1) % 10 == 0:
-            print(f"  {seed + 1}/{n_seeds} seeds, {n_fail} failures")
-    summary = {
-        "family": "stream_late",
-        "n_seeds": n_seeds,
-        "n_fail": n_fail,
-        "sf_dir": SF,
-        "results": results,
+
+def case(rng, seed):
+    n_batches = rng.choice([2, 3, 3, 4])
+    delay_us = rng.choice([5, 10, 10, 20]) * 60_000_000
+    win_us = rng.choice([30, 60, 60, 120]) * 60_000_000
+    # weighted assignment, sometimes leaving a batch empty
+    weights = [rng.random() + 0.05 for _ in range(n_batches)]
+    if n_batches >= 3 and rng.random() < 0.2:
+        weights[rng.randrange(n_batches)] = 0.0  # engineered empty batch
+    tot = sum(weights)
+    cum, acc = [], 0.0
+    for w in weights:
+        acc += w / tot
+        cum.append(acc)
+    # the row -> batch draws continue on this RNG in check, over the rows
+    return {
+        "n_batches": n_batches,
+        "delay_us": delay_us,
+        "win_us": win_us,
+        "_cum": cum,
+        "_rng": rng,
     }
-    if out_path:
-        with open(out_path, "w") as fh:
-            json.dump(summary, fh, indent=1)
-    print(f"STREAM-LATE FUZZ: {n_seeds - n_fail}/{n_seeds} match, {n_fail} failures")
-    return 1 if n_fail else 0
 
 
-if __name__ == "__main__":
-    sys.exit(main())
+def assign(rows, c) -> dict:
+    """Row -> batch, drawn from the case's RNG by the cumulative weights."""
+    rng, assignment = c["_rng"], {}
+    for e, _u, _t in rows:
+        x = rng.random()
+        assignment[e] = next(i for i, p in enumerate(c["_cum"]) if x <= p)
+    return assignment
+
+
+def check(run, c):
+    rows = run.state
+    assignment = assign(rows, c)
+    d = _write_batches(run.spark, rows, assignment, c["n_batches"])
+    try:
+        exp = _expected(rows, assignment, c["n_batches"], c["delay_us"], c["win_us"])
+        act = _actual(run.spark, d, c["delay_us"], c["win_us"])
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+    run.agree(expected=exp, spark=act)

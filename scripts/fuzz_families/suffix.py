@@ -1,7 +1,7 @@
 """Differential fuzz for the suffix-order family (round 12 follow-up to
 the graph family): q_suffix_rank, q_maximal_repeat, q_repeat_profile
 across corpus SHAPES the fixed sf fixtures never produce — THREE
-independent implementations per seed (the fuzz_graph pattern):
+independent implementations per seed (the graph family's pattern):
 
 1. the REAL registered queries (prefix-doubling rank rounds + the
    binary LCP walk, operators/suffix.py) over a synthesized documents
@@ -30,30 +30,30 @@ Input families, cycled per seed — each aims at a known failure class:
   guard's pass side) among normal docs;
 - random: small-vocabulary random documents (generic tie mix).
 
-Usage: python scripts/fuzz_suffix.py [n_seeds] [out.json]
-Exit 0 iff every seed matches Spark == DuckDB (driver normalization)
-and both match the referee row-for-row.
+A seed passes iff, for every query, Spark == DuckDB (driver
+normalization) and both match the referee row-for-row.
+
+Run: python scripts/fuzz.py suffix [n_seeds] [out.json]
 """
 
 from __future__ import annotations
 
-import json
-import math
-import os
 import random
-import shutil
-import sys
-import tempfile
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
-
-import duckdb  # noqa: E402
-import pandas as pd  # noqa: E402
-
 SF = "/root/testdata/sf0.001"
+SEED_BASE = 12700
+# The suffix operators localCheckpoint all 8 doubling levels per query;
+# over many seeds the checkpoint blocks outlive their Python references
+# faster than the ContextCleaner drains them and the driver heap OOMs
+# (observed at ~70 seeds on a 1g heap).  A 6g heap (the harness session
+# has 8g) plus a session restart every RECYCLE seeds bounds the block
+# population deterministically.
+RECYCLE = 25
 REPEAT_L = 8  # q_repeat_profile's duplicated-position threshold
 CAP = 128  # 2^_SUFFIX_ROUNDS
+SLUGS = ("q_suffix_rank", "q_maximal_repeat", "q_repeat_profile")
+KINDS = ["all_same", "runs", "periodic", "shared_prefix", "single", "boundary", "random"]
 
 
 # ---------------------------------------------------------------------------
@@ -186,17 +186,20 @@ def synth(rng: random.Random, family: str) -> list[tuple[int, str]]:
     return docs
 
 
-def make_sf_dir(base: str, docs: list[tuple[int, str]]) -> str:
-    d = os.path.join(base, "sf_synth")
-    os.makedirs(d, exist_ok=True)
-    for name in os.listdir(SF):
-        dst = os.path.join(d, name)
-        if not os.path.exists(dst):
-            os.symlink(os.path.join(SF, name), dst)
-    dp = os.path.join(d, "documents.parquet")
-    if os.path.islink(dp):
-        os.unlink(dp)
-    pd.DataFrame(
+def case(rng, seed):
+    kind = KINDS[seed % len(KINDS)]
+    docs = synth(rng, kind)
+    return {"kind": kind, "n_docs": len(docs), "_docs": docs}
+
+
+def check(run, c):
+    import pandas as pd
+
+    from nomad_event_streamer_spark.plans import ORACLES, QUERIES
+
+    docs = c["_docs"]
+    ref = referee(docs)
+    documents = pd.DataFrame(
         {
             "doc_id": [i for i, _ in docs],
             "text": [t for _, t in docs],
@@ -204,149 +207,11 @@ def make_sf_dir(base: str, docs: list[tuple[int, str]]) -> str:
             "source": ["fuzz"] * len(docs),
             "n_chars": [len(t) for _, t in docs],
         }
-    ).to_parquet(dp, index=False)
-    return d
-
-
-# ---------------------------------------------------------------------------
-# driver-normalized compare (the fuzz_graph inlined contract)
-# ---------------------------------------------------------------------------
-
-
-def norm_rows(cols, rows):
-    import decimal
-
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def cell(v):
-        if v is None:
-            return None
-        if isinstance(v, decimal.Decimal):
-            return repr(float(v))
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        return v
-
-    return sorted((tuple(cell(r[i]) for i in order) for r in rows), key=repr)
-
-
-SLUGS = ("q_suffix_rank", "q_maximal_repeat", "q_repeat_profile")
-
-
-def main() -> None:
-    n_seeds = int(sys.argv[1]) if len(sys.argv) > 1 else 21
-    out_path = sys.argv[2] if len(sys.argv) > 2 else None
-
-    from pyspark.sql import SparkSession
-
-    from nomad_event_streamer_spark.plans import ORACLES, QUERIES
-    from nomad_event_streamer_spark.session import ensure_runtime_confs
-
-    def fresh_session():
-        # The suffix operators localCheckpoint all 8 doubling levels per
-        # query; over many seeds the checkpoint blocks outlive their
-        # Python references faster than the ContextCleaner drains them
-        # and the driver heap OOMs (observed at ~70 seeds on the default
-        # 1g).  A bigger heap plus a session recycle every RECYCLE seeds
-        # bounds the block population deterministically.
-        s = (
-            SparkSession.builder.master("local[4]")
-            .config("spark.sql.shuffle.partitions", "4")
-            .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", "6g")
-            .getOrCreate()
-        )
-        ensure_runtime_confs(s)
-        return s
-
-    RECYCLE = 25
-    spark = fresh_session()
-
-    families = [
-        "all_same",
-        "runs",
-        "periodic",
-        "shared_prefix",
-        "single",
-        "boundary",
-        "random",
-    ]
-    failures: list[dict] = []
-    for seed in range(n_seeds):
-        if seed and seed % RECYCLE == 0:
-            spark.stop()
-            spark = fresh_session()
-        rng = random.Random(12700 + seed)
-        family = families[seed % len(families)]
-        docs = synth(rng, family)
-        ref = referee(docs)
-        base = tempfile.mkdtemp(prefix="nes_suffix_")
-        try:
-            sf_dir = make_sf_dir(base, docs)
-            con = duckdb.connect()
-            for name in (
-                "region nation customer supplier part orders lineitem "
-                "events documents embeddings"
-            ).split():
-                con.execute(
-                    f"CREATE VIEW {name} AS SELECT * FROM "
-                    f"read_parquet('{sf_dir}/{name}.parquet')"
-                )
-            for slug in SLUGS:
-                sdf = QUERIES[slug](spark, sf_dir)
-                scols = sdf.columns
-                srows = [tuple(r) for r in sdf.collect()]
-                tbl = con.execute(ORACLES[slug]).fetch_arrow_table()
-                dcols = tbl.column_names
-                drows = list(zip(*[c.to_pylist() for c in tbl.columns]))
-                rcols = list(REFEREE_COLS[slug])
-                rrows = ref[slug]
-                ok = (
-                    sorted(scols) == sorted(dcols)
-                    and len(srows) == len(drows) == len(rrows)
-                    and norm_rows(scols, srows)
-                    == norm_rows(dcols, drows)
-                    == norm_rows(rcols, rrows)
-                )
-                if not ok:
-                    failures.append(
-                        {
-                            "seed": seed,
-                            "family": family,
-                            "slug": slug,
-                            "n_docs": len(docs),
-                            "spark": srows[:5],
-                            "duck": drows[:5],
-                            "referee": rrows[:5],
-                        }
-                    )
-            con.close()
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
-        if (seed + 1) % 10 == 0:
-            print(f"  {seed + 1}/{n_seeds} seeds, {len(failures)} failures")
-
-    print(
-        f"FUZZ SUFFIX: {n_seeds - len(set(f['seed'] for f in failures))}"
-        f"/{n_seeds} match, {len(failures)} failures"
     )
-    if out_path:
-        with open(out_path, "w", encoding="utf-8") as fh:
-            json.dump(
-                {
-                    "n_seeds": n_seeds,
-                    "slugs": list(SLUGS),
-                    "families": families,
-                    "n_failures": len(failures),
-                    "failures": failures[:20],
-                },
-                fh,
-                indent=1,
-                default=str,
-            )
-    spark.stop()
-    sys.exit(1 if failures else 0)
-
-
-if __name__ == "__main__":
-    main()
+    sf_dir, con = run.synth(documents=documents)
+    for slug in SLUGS:
+        c["slug"] = slug
+        result = run.compare(QUERIES[slug](run.spark, sf_dir), ORACLES[slug], con)
+        run.same(result, (REFEREE_COLS[slug], ref[slug]), ("spark", "referee"))
+    del c["slug"]
+    return {"kind": c["kind"]}

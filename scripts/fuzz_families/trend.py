@@ -1,6 +1,6 @@
 """Differential fuzz for the round-11 trend/sequence battery:
 q_runs_test + q_mk_trend + q_cochran_armitage over synthesized event
-streams — THREE independent implementations per seed (the fuzz_rankcdf
+streams — THREE independent implementations per seed (the rankcdf family's
 pattern):
 
 1. the REAL registered queries against a synthesized events table,
@@ -20,29 +20,21 @@ Input families, cycled per seed:
 - skewed_conv: purchase fraction trending across day-of-week (the CA
   alternative hypothesis) or all/none converted (the z² NULL guards).
 
-Usage: python scripts/fuzz_trend.py [n_seeds] [out.json]
-Exit 0 iff every seed matches Spark == DuckDB (driver normalization)
-and both match the referee on the integer statistics.
+A seed passes iff, for every query, Spark == DuckDB (driver
+normalization) and Spark matches the referee on the integer statistics.
+
+Run: python scripts/fuzz.py trend [n_seeds] [out.json]
 """
 
 from __future__ import annotations
 
-import json
-import math
-import os
 import random
-import shutil
-import sys
-import tempfile
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
-
-import duckdb  # noqa: E402
-import pandas as pd  # noqa: E402
-
 SF = "/root/testdata/sf0.001"
+SEED_BASE = 9900
 SLUGS = ("q_runs_test", "q_mk_trend", "q_cochran_armitage")
+KINDS = ["clumped", "uniform", "constant", "tiny", "skewed_conv"]
 HOUR_US = 3_600_000_000
 DAY_US = 86_400_000_000
 
@@ -160,149 +152,40 @@ def synth(rng: random.Random, family: str) -> tuple[list[int], list[str]]:
     return ts, types
 
 
-def make_sf_dir(base: str, ts_us: list[int], types: list[str]) -> str:
-    tmpl = pd.read_parquet(f"{SF}/events.parquet")
-    n = len(ts_us)
-    reps = max(1, -(-n // len(tmpl)))
-    ev = pd.concat([tmpl] * reps, ignore_index=True).iloc[:n].copy()
-    if n:
-        ev["ts"] = pd.to_datetime(pd.array(ts_us, dtype="int64"), unit="us")
-        ev["ts"] = ev["ts"].astype(tmpl["ts"].dtype)
-        ev["event_type"] = types
-        ev["event_id"] = range(1, n + 1)
-    d = os.path.join(base, "sf_synth")
-    os.makedirs(d, exist_ok=True)
-    for name in os.listdir(SF):
-        dst = os.path.join(d, name)
-        if not os.path.exists(dst):
-            os.symlink(os.path.join(SF, name), dst)
-    evp = os.path.join(d, "events.parquet")
-    if os.path.islink(evp):
-        os.unlink(evp)
-    ev.to_parquet(evp, index=False)
-    return d
-
-
-def norm_rows(cols, rows):
-    import decimal
-
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def cell(v):
-        if v is None:
-            return None
-        if isinstance(v, decimal.Decimal):
-            return repr(float(v))
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        return v
-
-    return sorted((tuple(cell(r[i]) for i in order) for r in rows), key=repr)
-
-
 REF = {"q_runs_test": ref_runs, "q_mk_trend": ref_mk}
 
 
-def main() -> None:
-    n_seeds = int(sys.argv[1]) if len(sys.argv) > 1 else 30
-    out_path = sys.argv[2] if len(sys.argv) > 2 else None
+def case(rng, seed):
+    kind = KINDS[seed % len(KINDS)]
+    ts_us, types = synth(rng, kind)
+    return {"kind": kind, "n": len(ts_us), "_ts_us": ts_us, "_types": types}
 
-    from pyspark.sql import SparkSession
 
+def events_table(run, ts_us: list[int], types: list[str]):
+    import pandas as pd
+
+    n = len(ts_us)
+    ev = run.template("events", n)
+    if n:
+        ts_dtype = ev["ts"].dtype
+        ev["ts"] = pd.to_datetime(pd.array(ts_us, dtype="int64"), unit="us")
+        ev["ts"] = ev["ts"].astype(ts_dtype)
+        ev["event_type"] = types
+        ev["event_id"] = range(1, n + 1)
+    return ev
+
+
+def check(run, c):
     from nomad_event_streamer_spark.plans import ORACLES, QUERIES
-    from nomad_event_streamer_spark.session import ensure_runtime_confs
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    ensure_runtime_confs(spark)
-
-    families = ["clumped", "uniform", "constant", "tiny", "skewed_conv"]
-    failures: list[dict] = []
-    for seed in range(n_seeds):
-        rng = random.Random(9900 + seed)
-        family = families[seed % len(families)]
-        ts_us, types = synth(rng, family)
-        base = tempfile.mkdtemp(prefix="nes_trend_")
-        try:
-            sf_dir = make_sf_dir(base, ts_us, types)
-            con = duckdb.connect()
-            for name in (
-                "region nation customer supplier part orders lineitem "
-                "events documents embeddings"
-            ).split():
-                con.execute(
-                    f"CREATE VIEW {name} AS SELECT * FROM "
-                    f"read_parquet('{sf_dir}/{name}.parquet')"
-                )
-            for slug in SLUGS:
-                sdf = QUERIES[slug](spark, sf_dir)
-                scols = sdf.columns
-                srows = [tuple(r) for r in sdf.collect()]
-                tbl = con.execute(ORACLES[slug]).fetch_arrow_table()
-                dcols = tbl.column_names
-                drows = list(zip(*[c.to_pylist() for c in tbl.columns]))
-                ok = (
-                    sorted(scols) == sorted(dcols)
-                    and len(srows) == len(drows)
-                    and norm_rows(scols, srows) == norm_rows(dcols, drows)
-                )
-                ref = None
-                if ok and srows:
-                    row = dict(zip(scols, srows[0]))
-                    if slug in REF:
-                        ref = REF[slug](ts_us)
-                    else:
-                        ref = ref_ca(ts_us, types)
-                    for k, want in ref.items():
-                        got = row.get(k)
-                        if got != want and not (
-                            got is None and want is None
-                        ):
-                            ok = False
-                            break
-                if not ok:
-                    failures.append(
-                        {
-                            "seed": seed,
-                            "family": family,
-                            "slug": slug,
-                            "n": len(ts_us),
-                            "spark": srows[:3],
-                            "duck": drows[:3],
-                            "referee": ref,
-                        }
-                    )
-            con.close()
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
-        if (seed + 1) % 10 == 0:
-            print(f"  {seed + 1}/{n_seeds} seeds, {len(failures)} failures")
-
-    print(
-        f"FUZZ TREND: {n_seeds - len(set(f['seed'] for f in failures))}"
-        f"/{n_seeds} match, {len(failures)} failures"
-    )
-    if out_path:
-        with open(out_path, "w", encoding="utf-8") as fh:
-            json.dump(
-                {
-                    "n_seeds": n_seeds,
-                    "slugs": list(SLUGS),
-                    "families": families,
-                    "n_failures": len(failures),
-                    "failures": failures[:20],
-                },
-                fh,
-                indent=1,
-                default=str,
-            )
-    spark.stop()
-    sys.exit(1 if failures else 0)
-
-
-if __name__ == "__main__":
-    main()
+    ts_us, types = c["_ts_us"], c["_types"]
+    sf_dir, con = run.synth(events=events_table(run, ts_us, types))
+    for slug in SLUGS:
+        c["slug"] = slug
+        cols, rows = run.compare(QUERIES[slug](run.spark, sf_dir), ORACLES[slug], con)
+        if rows:
+            row = dict(zip(cols, rows[0]))
+            ref = REF[slug](ts_us) if slug in REF else ref_ca(ts_us, types)
+            run.agree(referee=ref, spark={k: row.get(k) for k in ref})
+    del c["slug"]
+    return {"kind": c["kind"]}

@@ -20,19 +20,16 @@ SF_DIR = "/root/testdata/sf0.001"
 #     driver's own CORRECTNESS gate, which it runs independently),
 #   - test_plan_properties.py (263 plan-shape pins, re-checked by the
 #     builder each round via scripts/dump_plans.py artifacts),
-#   - the seeded fuzzers and multi-minute referee sweeps (run by the
-#     builder via scripts/fuzz_*.py and at round close).
+#   - the multi-minute referee sweeps.  The fuzz families stay in the
+#     fast tier as seeds 0-2 of each (test_fuzz_harness.py) plus the
+#     per-family pins (test_*_fuzz.py, test_fuzz_diff.py); the full
+#     sweeps run as ``python scripts/fuzz.py --all``.
 # Set SPARK_GRAFT_FULL_TESTS=1 to run everything (builder/judge tier);
 # deselection keeps the report honest ("N deselected").
 # ---------------------------------------------------------------------------
 FAST_TIER_EXCLUDED_FILES = {
     "test_oracle_parity.py",
     "test_plan_properties.py",
-    "test_asof_fuzz.py",
-    "test_stream_late_fuzz.py",
-    "test_fuzz_diff.py",
-    "test_dedup_fuzz.py",
-    "test_url_fuzz.py",
     "test_round11_ops.py",
     "test_round12_ops.py",
     "test_round8c_ops.py",

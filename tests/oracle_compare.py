@@ -81,18 +81,29 @@ def duckdb_fetch_arrow(
     return cols, rows
 
 
-def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> None:
-    spark_cols = spark_df.columns
-    spark_rows = [tuple(r) for r in spark_df.collect()]
-    duck_cols, duck_rows = duckdb_fetch_arrow(con, sql)
+def assert_same(a, b, names=("spark", "duckdb")) -> None:
+    """Assert two ``(columns, rows)`` results are equal under the driver's
+    normalization: same column names, same row count, same sorted
+    normalized rows."""
+    (a_cols, a_rows), (b_cols, b_rows) = a, b
+    na, nb = names
+    assert sorted(a_cols) == sorted(b_cols), (
+        f"column mismatch: {na}={sorted(a_cols)} {nb}={sorted(b_cols)}"
+    )
+    assert len(a_rows) == len(b_rows), (
+        f"row count mismatch: {na}={len(a_rows)} {nb}={len(b_rows)}"
+    )
+    w = max(len(na), len(nb))
+    norm_a, norm_b = normalize(a_cols, a_rows), normalize(b_cols, b_rows)
+    for i, (x, y) in enumerate(zip(norm_a, norm_b)):
+        assert x == y, (
+            f"value mismatch at sorted row {i}:\n  {na:<{w}}: {x}\n  {nb:<{w}}: {y}"
+        )
 
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"column mismatch: spark={sorted(spark_cols)} duckdb={sorted(duck_cols)}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"row count mismatch: spark={len(spark_rows)} duckdb={len(duck_rows)}"
-    )
-    ns = normalize(spark_cols, spark_rows)
-    nd = normalize(duck_cols, duck_rows)
-    for i, (a, b) in enumerate(zip(ns, nd)):
-        assert a == b, f"value mismatch at sorted row {i}:\n  spark : {a}\n  duckdb: {b}"
+
+def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str):
+    """Spark DataFrame vs DuckDB SQL; returns the Spark side as
+    ``(columns, rows)`` for any further (referee) check."""
+    result = (spark_df.columns, [tuple(r) for r in spark_df.collect()])
+    assert_same(result, duckdb_fetch_arrow(con, sql))
+    return result

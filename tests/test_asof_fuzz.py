@@ -1,60 +1,41 @@
-"""Smoke for scripts/fuzz_asof.py: the as-of device must agree with
-DuckDB's native ASOF JOIN on a few pinned seeds covering backward,
-forward, and tolerance shapes.  The full 100-seed sweep runs via the
-script (FUZZ_r07 asof family); this keeps the harness from regressing.
+"""Pinned seeds of the asof fuzz family (scripts/fuzz_families/asof.py):
+the as-of device must agree with DuckDB's native ASOF JOIN on a few
+seeds covering backward, forward, and tolerance shapes.  The full
+100-seed sweep runs as ``python scripts/fuzz.py asof``.
 """
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 import pytest
 
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
 
-@pytest.fixture(scope="module")
-def harness():
-    import importlib.util
-    import pathlib
+import fuzz  # noqa: E402
+from fuzz_families import asof  # noqa: E402
 
-    path = pathlib.Path(__file__).resolve().parents[1] / "scripts" / "fuzz_asof.py"
-    spec = importlib.util.spec_from_file_location("fuzz_asof", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+from .oracle_compare import compare, duckdb_connection  # noqa: E402
+
+CASES = dict(fuzz.Run(asof).cases(range(5)))
 
 
 @pytest.fixture(scope="module")
-def duck(harness):
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{harness.SF}/events.parquet')"
-    )
-    return con
-
-
-def _rows_hash(rows):
-    return sorted(
-        "|".join("NULL" if v is None else repr(int(v)) for v in r)
-        for r in rows
-    )
+def duck():
+    con = duckdb_connection(asof.SF)
+    yield con
+    con.close()
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3, 4])
-def test_seed_matches_duckdb_native_asof(harness, duck, spark, seed):
-    r = harness.run_seed(spark, duck, _rows_hash, seed)
-    assert r["status"] == "match", r
-    assert r["n_left"] > 0
+def test_seed_matches_duckdb_native_asof(duck, spark, seed):
+    df, sql = asof.render(spark, CASES[seed])
+    _, rows = compare(df, duck, sql)
+    assert len(rows) > 0
 
 
-def test_seeds_cover_both_directions_and_tolerance(harness, duck, spark):
-    import random
-
-    seen = set()
-    for seed in range(5):
-        rng = random.Random(seed)
-        direction = rng.choice(["backward", "forward"])
-        tol = None if rng.random() < 0.4 else "tol"
-        seen.add((direction, tol is not None))
+def test_seeds_cover_both_directions_and_tolerance():
+    seen = {(c["direction"], c["tolerance_us"] is not None) for c in CASES.values()}
     # the pinned smoke seeds must exercise more than one shape
     assert len(seen) >= 2

@@ -1,9 +1,11 @@
-"""Smoke coverage for the differential fuzzer (scripts/fuzz_diff.py):
-a handful of seeds of every shape must hash-match DuckDB at sf0.001.
-The full 200-seed sweep runs via the verify gate (FUZZ_r{N}.json)."""
+"""Smoke coverage for the differential diff fuzz family
+(scripts/fuzz_families/diff.py): a handful of seeds of every shape must
+hash-match DuckDB at sf0.001.  The full 3,000-seed sweep runs as
+``python scripts/fuzz.py diff``."""
 
 from __future__ import annotations
 
+import random
 import sys
 from pathlib import Path
 
@@ -11,9 +13,13 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
 
-import fuzz_diff  # noqa: E402
+from fuzz_families import diff  # noqa: E402
 
 from .oracle_compare import compare, duckdb_connection  # noqa: E402
+
+
+def _gen(seed: int) -> diff.Gen:
+    return diff.Gen(random.Random(diff.SEED_BASE + seed))
 
 
 @pytest.fixture(scope="module")
@@ -25,18 +31,17 @@ def con(sf_dir):
 
 @pytest.fixture(scope="module")
 def pool(con):
-    return fuzz_diff.str_value_pool(con)
+    return diff.str_value_pool(con)
 
 
 @pytest.mark.parametrize("seed", range(10))
 def test_fuzz_seed_matches(seed, spark, sf_dir, con, pool):
-    gen = fuzz_diff.Gen(seed, pool)
-    df, sql = gen.build(spark, sf_dir)
+    df, sql = _gen(seed).build(spark, sf_dir, pool)
     compare(df, con, sql)
 
 
-def test_grammar_emits_every_shape(pool):
-    shapes = {fuzz_diff.Gen(s, pool).shape for s in range(60)}
+def test_grammar_emits_every_shape():
+    shapes = {_gen(s).shape for s in range(60)}
     assert shapes == {
         "project",
         "agg",
@@ -49,6 +54,6 @@ def test_grammar_emits_every_shape(pool):
     }
 
 
-def test_grammar_emits_every_table(pool):
-    tables = {fuzz_diff.Gen(s, pool).table for s in range(60)}
+def test_grammar_emits_every_table():
+    tables = {_gen(s).table for s in range(60)}
     assert tables == {"events", "lineitem", "join", "join3", "fulljoin"}

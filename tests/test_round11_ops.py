@@ -65,7 +65,7 @@ class TestLinkPredictCapped:
 
 
 class TestRankCdfDegenerateInputs:
-    """Regression pins for the two divergences scripts/fuzz_rankcdf.py
+    """Regression pins for the two divergences scripts/fuzz_families/rankcdf.py
     found on its first runs (round 11)."""
 
     @staticmethod

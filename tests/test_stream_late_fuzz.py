@@ -1,8 +1,9 @@
-"""Smoke for scripts/fuzz_stream_late.py (VERDICT r06 item #6): the
+"""Pinned scenarios of the stream_late fuzz family
+(scripts/fuzz_families/stream_late.py, VERDICT r06 item #6): the
 watermark-protocol fuzzer's expected-side replay must reproduce Spark's
 actual streaming output for a handful of seeds, including a B=2
-(no-drop) and an empty-batch shape.  The full 100-seed sweep runs via
-the script (FUZZ_r07 stream_late family); this keeps the harness itself
+(no-drop) and an empty-batch shape.  The full 100-seed sweep runs as
+``python scripts/fuzz.py stream_late``; this keeps the family itself
 from regressing silently.
 """
 
@@ -10,20 +11,19 @@ from __future__ import annotations
 
 import random
 import shutil
+import sys
+from pathlib import Path
 
 import pytest
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
+
+from fuzz_families import stream_late  # noqa: E402
 
 
 @pytest.fixture(scope="module")
 def harness():
-    import importlib.util
-    import pathlib
-
-    path = pathlib.Path(__file__).resolve().parents[1] / "scripts" / "fuzz_stream_late.py"
-    spec = importlib.util.spec_from_file_location("fuzz_stream_late", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    return stream_late
 
 
 @pytest.fixture(scope="module")

@@ -1,47 +1,45 @@
-"""Smoke for scripts/fuzz_url.py: the three-way URL-canonicalization
-differential (Spark Column pipeline vs DuckDB SQL rendering vs a
-urllib-based Python referee).  The full 200-seed sweep runs via the
-script (FUZZ_r08 url family); this keeps the harness — and the
+"""The url fuzz family (scripts/fuzz_families/url.py): the three-way
+URL-canonicalization differential (Spark Column pipeline vs DuckDB SQL
+rendering vs a urllib-based Python referee).  The full 200-seed sweep
+runs as ``python scripts/fuzz.py url``; this keeps the family — and the
 empty-kept-params coalesce fix it discovered — from regressing.
 """
 
 from __future__ import annotations
 
-import pytest
+import random
+import sys
+from pathlib import Path
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
+
+import fuzz  # noqa: E402
+from fuzz_families import url  # noqa: E402
 
 
-@pytest.fixture(scope="module")
-def harness():
-    import importlib.util
-    import pathlib
-
-    path = pathlib.Path(__file__).resolve().parents[1] / "scripts" / "fuzz_url.py"
-    spec = importlib.util.spec_from_file_location("fuzz_url", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+def _url(seed: int) -> str:
+    return url.gen_url(random.Random(url.SEED_BASE + seed))
 
 
-def test_generator_hits_the_empty_kept_branch(harness):
+def test_generator_hits_the_empty_kept_branch():
     # the grammar must keep producing URLs whose surviving-param set is
     # empty — the branch where DuckDB's array_to_string([]) NULL
     # divergence hid until this fuzzer ran
-    empties = sum(
-        1
-        for s in range(60)
-        if harness.py_canon(harness.gen_url(s))["n_params_kept"] == 0
-    )
+    empties = sum(1 for s in range(60) if url.py_canon(_url(s))["n_params_kept"] == 0)
     assert empties >= 5
 
 
-def test_referee_rules_are_idempotent(harness):
+def test_referee_rules_are_idempotent():
     for s in range(30):
-        c = harness.py_canon(harness.gen_url(s))["canon_url"]
-        assert harness.py_canon(c)["canon_url"] == c
+        c = url.py_canon(_url(s))["canon_url"]
+        assert url.py_canon(c)["canon_url"] == c
 
 
-def test_small_sweep_matches_three_ways(harness, spark):
-    # exercise run() on a pinned prefix of the seed space; uses the
-    # session-scoped spark fixture implicitly via the active session
-    rc = harness.run(25, None, stop=False)
-    assert rc == 0
+def test_small_sweep_matches_three_ways(spark):
+    # a pinned prefix of the seed space, on the session-scoped fixture
+    run = fuzz.Run(url, spark)
+    try:
+        summary = run.go(range(25))
+    finally:
+        run.close()
+    assert summary["n_fail"] == 0, summary["failures"]
