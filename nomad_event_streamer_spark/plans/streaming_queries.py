@@ -9,9 +9,13 @@ against a plain GROUP BY — proving the GroupState bookkeeping is exact.
 
 from __future__ import annotations
 
+import atexit
+import glob
 import os
+import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -20,6 +24,21 @@ from ..session import ensure_runtime_confs
 from ..streaming.dedup_state import summary_stream
 from ..tables import canonicalize_events_ts, load, schema as table_schema
 from .registry import query
+
+
+_ROOT: str | None = None
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A new directory under this process's one scratch root, which is
+    removed at exit.  Some queries return lazy reads of what they write
+    here (memory-sink checkpoints, batch files, foreachBatch targets),
+    so nothing under the root is removed earlier."""
+    global _ROOT
+    if _ROOT is None:
+        _ROOT = tempfile.mkdtemp(prefix="nes_streaming_")
+        atexit.register(shutil.rmtree, _ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_ROOT)
 
 
 _STREAM_DIRS: dict[tuple[str, str], str] = {}
@@ -41,14 +60,10 @@ def _table_stream_dir(sf_dir: str, table: str) -> str:
         if os.path.isdir(src):
             _STREAM_DIRS[key] = src
         else:
-            d = tempfile.mkdtemp(prefix="nes_stream_")
+            d = _scratch_dir("nes_stream_")
             os.symlink(src, os.path.join(d, f"{table}.parquet"))
             _STREAM_DIRS[key] = d
     return _STREAM_DIRS[key]
-
-
-def _events_stream_dir(sf_dir: str) -> str:
-    return _table_stream_dir(sf_dir, "events")
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,7 +71,7 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader — streaming sources never infer)."""
     ensure_runtime_confs(spark)
     schema = table_schema(spark, sf_dir, "events")
-    stream = spark.readStream.schema(schema).parquet(_events_stream_dir(sf_dir))
+    stream = spark.readStream.schema(schema).parquet(_table_stream_dir(sf_dir, "events"))
     return canonicalize_events_ts(stream)
 
 
@@ -69,44 +84,34 @@ def _stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _run_to_memory_drain(df: DataFrame, output_mode: str) -> DataFrame:
-    """Like ``_run_to_memory`` but drains a custom Python streaming
-    source to exhaustion.  ``availableNow`` snapshots only the FIRST
-    prefetched batch of a ``SimpleDataSourceStreamReader`` (one ``read()``
-    call), so a throttled source would stop after one budget's worth;
+def _run_to_memory(
+    df: DataFrame, output_mode: str, drain: bool = False, checkpoint: str | None = None
+) -> DataFrame:
+    """Run a bounded streaming query into a memory sink; returns the sink
+    table as a DataFrame.
+
+    ``drain`` runs a custom Python streaming source to exhaustion:
+    ``availableNow`` snapshots only the FIRST prefetched batch of a
+    ``SimpleDataSourceStreamReader`` (one ``read()`` call), so a
+    throttled source would stop after one budget's worth;
     ``processAllAvailable`` keeps planning micro-batches until the
     source's offset stops advancing — the whole capture."""
     name = f"q_{uuid.uuid4().hex[:12]}"
-    checkpoint = os.path.join(tempfile.mkdtemp(prefix="nes_ckpt_"), "cp")
-    q = (
+    writer = (
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .start()
+        .option("checkpointLocation", checkpoint or _scratch_dir("nes_ckpt_"))
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-    return df.sparkSession.table(name)
-
-
-def _run_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
-    """Run a bounded streaming query into a memory sink; returns the sink
-    table as a DataFrame."""
-    name = f"q_{uuid.uuid4().hex[:12]}"
-    checkpoint = os.path.join(tempfile.mkdtemp(prefix="nes_ckpt_"), "cp")
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    if drain:
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination()
+    else:
+        writer.trigger(availableNow=True).start().awaitTermination()
     return df.sparkSession.table(name)
 
 
@@ -192,7 +197,7 @@ def q_stream_nomad_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.runner import build_stream
 
     ensure_runtime_confs(spark)
-    input_dir = tempfile.mkdtemp(prefix="nes_nomad_in_")
+    input_dir = _scratch_dir("nes_nomad_in_")
     with open(os.path.join(input_dir, "stream.ndjson"), "w") as f:
         f.write("\n".join(sample_stream(12)) + "\n")
     lines = spark.readStream.text(input_dir)
@@ -510,7 +515,7 @@ def q_stream_replay_throttled(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = parsed.groupBy("op").agg(
         F.count(F.lit(1)).alias("n_ops"), F.max("seq").alias("max_seq")
     )
-    return _run_to_memory_drain(agg, "complete")
+    return _run_to_memory(agg, "complete", drain=True)
 
 
 @query(
@@ -531,17 +536,8 @@ def q_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_runtime_confs(spark)
     stream = _stream_events(spark, sf_dir)
     agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    name = f"q_{uuid.uuid4().hex[:12]}"
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="nes_ss_ckpt_"), "cp")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt = _scratch_dir("nes_ss_ckpt_")
+    _run_to_memory(agg, "complete", checkpoint=ckpt)
     state = spark.read.format("statestore").load(ckpt)
     # the value struct's field name is the aggregation buffer's internal
     # attribute name (varies: "n" or "count") — extract positionally
@@ -791,31 +787,37 @@ def q_stream_session_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LATE_DIRS: dict[str, str] = {}
+_BATCH_DIRS: dict[tuple[str, str], str] = {}
 
 
-def _late_batches_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Three deterministic micro-batch files (user_id % 3 == 0/1/2),
-    ordered by explicit modification times so the file-stream source
-    replays them as batches 0, 1, 2 — the arrival schedule the late-data
-    oracle replays."""
-    if sf_dir not in _LATE_DIRS:
-        import glob
-        import shutil
-
-        ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-        work = tempfile.mkdtemp(prefix="nes_late_work_")
-        out = tempfile.mkdtemp(prefix="nes_late_in_")
-        for b in range(3):
-            ev.where(F.col("user_id") % 3 == b).coalesce(1).write.parquet(
-                f"{work}/b{b}"
-            )
-            part = glob.glob(f"{work}/b{b}/part-*.parquet")[0]
-            dst = os.path.join(out, f"{chr(97 + b)}_{b}.parquet")
-            shutil.copy(part, dst)
-            os.utime(dst, (1000 + b * 100, 1000 + b * 100))
-        _LATE_DIRS[sf_dir] = out
-    return _LATE_DIRS[sf_dir]
+def _batch_stream(
+    spark: SparkSession,
+    key: tuple[str, str],
+    schema: str,
+    frames: Callable[[], list[DataFrame]],
+) -> DataFrame:
+    """A file stream that replays ``frames()`` as micro-batches 0, 1, 2,
+    ...: one parquet file per frame, modification times rising in list
+    order, read one file per trigger.  The files are written once per
+    ``key`` for the process."""
+    if key not in _BATCH_DIRS:
+        work = _scratch_dir("nes_batches_work_")
+        out = _scratch_dir("nes_batches_in_")
+        try:
+            for b, frame in enumerate(frames()):
+                frame.coalesce(1).write.parquet(f"{work}/b{b}")
+                part = glob.glob(f"{work}/b{b}/part-*.parquet")[0]
+                dst = os.path.join(out, f"{chr(97 + b)}_{b}.parquet")
+                shutil.copy(part, dst)
+                os.utime(dst, (1000 + b * 100, 1000 + b * 100))
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+        _BATCH_DIRS[key] = out
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(_BATCH_DIRS[key])
+    )
 
 
 @query(
@@ -865,13 +867,13 @@ def q_stream_late_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     REF staleness filter, app.rb:162-167, with the drop set now
     verifiable instead of declared.)"""
     ensure_runtime_confs(spark)
-    d = _late_batches_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, ts long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-        .withColumn("ts_t", F.timestamp_micros(F.expr("ts div 1000")))
-    )
+    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    stream = _batch_stream(
+        spark,
+        ("late", sf_dir),
+        "event_id long, user_id long, ts long",
+        lambda: [ev.where(F.col("user_id") % 3 == b) for b in range(3)],
+    ).withColumn("ts_t", F.timestamp_micros(F.expr("ts div 1000")))
     agg = (
         stream.withWatermark("ts_t", "10 minutes")
         .groupBy(F.window("ts_t", "1 hour"))
@@ -882,39 +884,6 @@ def q_stream_late_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("window.start")).alias("window_start_us"),
         F.col("n").cast("long").alias("n"),
     )
-
-
-_UPSERT_DIRS: dict[str, str] = {}
-
-
-def _upsert_batches_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Three deterministic micro-batch files (event_id % 3), mtime-ordered
-    so the file source replays them as batches 0, 1, 2 — each batch
-    carries a slice of every user's history, so the upsert target is
-    OVERWRITTEN with merged state on every round (the path that
-    distinguishes upsert from blind append)."""
-    if sf_dir not in _UPSERT_DIRS:
-        import glob
-        import shutil
-
-        ev = load(spark, sf_dir, "events").select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.expr("ts div 1000").alias("ts_us"),
-        )
-        work = tempfile.mkdtemp(prefix="nes_upsert_work_")
-        out = tempfile.mkdtemp(prefix="nes_upsert_in_")
-        for b in range(3):
-            ev.where(F.col("event_id") % 3 == b).coalesce(1).write.parquet(
-                f"{work}/b{b}"
-            )
-            part = glob.glob(f"{work}/b{b}/part-*.parquet")[0]
-            dst = os.path.join(out, f"{chr(97 + b)}_{b}.parquet")
-            shutil.copy(part, dst)
-            os.utime(dst, (1000 + b * 100, 1000 + b * 100))
-        _UPSERT_DIRS[sf_dir] = out
-    return _UPSERT_DIRS[sf_dir]
 
 
 @query(
@@ -955,14 +924,16 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops (Delta/Iceberg, not in this container) — the foreachBatch
     merge logic is identical; documented, not stubbed."""
     ensure_runtime_confs(spark)
-    d = _upsert_batches_dir(spark, sf_dir)
-    schema = "event_id long, user_id long, event_type string, ts_us long"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+    ev = load(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", F.expr("ts div 1000").alias("ts_us")
     )
-    root = tempfile.mkdtemp(prefix="nes_upsert_tgt_")
+    stream = _batch_stream(
+        spark,
+        ("upsert", sf_dir),
+        "event_id long, user_id long, event_type string, ts_us long",
+        lambda: [ev.where(F.col("event_id") % 3 == b) for b in range(3)],
+    )
+    root = _scratch_dir("nes_upsert_tgt_")
     state = {"path": None}
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -992,10 +963,7 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         stream.writeStream.foreachBatch(merge)
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.mkdtemp(prefix="nes_ckpt_"), "cp"),
-        )
+        .option("checkpointLocation", _scratch_dir("nes_ckpt_"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1076,42 +1044,24 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tested sf — a lease shorter than the minimum gap would make every
 # arrival a keeper and the state machine untestable.
 _TTL_US = 6_000_000_000
-_TTL_DIRS: dict[str, str] = {}
 
 
-def _doc_batches_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Three deterministic micro-batch files of (doc_id, text), split by
-    contiguous doc_id RANGE (not modulo — the TTL state machine's
-    verdicts are split-invariant only when batches are monotone in
-    doc_id, the arrival order both engines replay) and mtime-ordered so
-    the file-stream source reads them as batches 0, 1, 2."""
-    if sf_dir not in _TTL_DIRS:
-        import atexit
-        import glob
-        import shutil
+def _doc_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, text) replayed as three micro-batches split by contiguous
+    doc_id RANGE (not modulo — the TTL state machine's verdicts are
+    split-invariant only when batches are monotone in doc_id, the
+    arrival order both engines replay)."""
 
+    def frames() -> list[DataFrame]:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
         n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
         cuts = [(0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n)]
-        work = tempfile.mkdtemp(prefix="nes_ttl_work_")
-        out = tempfile.mkdtemp(prefix="nes_ttl_in_")
-        try:
-            for b, (lo, hi) in enumerate(cuts):
-                docs.where(
-                    (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-                ).coalesce(1).write.parquet(f"{work}/b{b}")
-                part = glob.glob(f"{work}/b{b}/part-*.parquet")[0]
-                dst = os.path.join(out, f"{chr(97 + b)}_{b}.parquet")
-                shutil.copy(part, dst)
-                os.utime(dst, (1000 + b * 100, 1000 + b * 100))
-        finally:
-            # ADVICE r08 #4: the intermediate write dir is dead the
-            # moment the part files are copied; the batch dir lives for
-            # the process (memoized) and is reclaimed at exit.
-            shutil.rmtree(work, ignore_errors=True)
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-        _TTL_DIRS[sf_dir] = out
-    return _TTL_DIRS[sf_dir]
+        return [
+            docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+            for lo, hi in cuts
+        ]
+
+    return _batch_stream(spark, ("docs", sf_dir), "doc_id BIGINT, text STRING", frames)
 
 
 def _ttl_dedup_oracle(
@@ -1215,12 +1165,7 @@ def _ttl_pipeline(
     from ..streaming.ttl_dedup import ttl_dedup_stream
 
     ensure_runtime_confs(spark)
-    schema = "doc_id BIGINT, text STRING"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_doc_batches_dir(spark, sf_dir))
-    )
+    stream = _doc_batches(spark, sf_dir)
     banded = dedup.minhash_bands_rowlocal(
         stream, n=3, num_hashes=16, rows_per_band=2
     )
@@ -1373,12 +1318,7 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         + 1
     )
     cut1, cut2 = n // 3, 2 * (n // 3)
-    schema = "doc_id BIGINT, text STRING"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_doc_batches_dir(spark, sf_dir))
-    )
+    stream = _doc_batches(spark, sf_dir)
     banded = dedup.minhash_bands_rowlocal(
         stream, n=3, num_hashes=16, rows_per_band=2
     )
@@ -1440,12 +1380,7 @@ def q_stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup
 
     ensure_runtime_confs(spark)
-    schema = "doc_id BIGINT, text STRING"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_doc_batches_dir(spark, sf_dir))
-    )
+    stream = _doc_batches(spark, sf_dir)
     banded = dedup.minhash_bands_rowlocal(
         stream, n=3, num_hashes=16, rows_per_band=2
     )

@@ -9,13 +9,16 @@ with a checkpointed Structured Streaming query:
   semantics; the bit-faithful variant is streaming.dedup_state.  Its
   state has one partition per core, each committing files every batch;
 - ``foreachBatch`` fans out to the webhook sinks (app.rb:211-267),
-  upgrading at-most-once to at-least-once with idempotent keys; each
-  micro-batch is computed and cached once (one dedup and state commit
-  per batch), and ``sinks.http_transport`` POSTs it from the driver.
+  upgrading at-most-once to effectively-once per batch id: a ledger
+  inside the checkpoint skips the delivery of a replayed batch, and the
+  skip still runs the batch so its state commits.  Each micro-batch is
+  computed and cached once (one dedup and state commit per batch), and
+  ``sinks.http_transport`` POSTs it from the driver.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,8 +26,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..session import ensure_runtime_confs
 from .pipeline import task_event_pipeline
-from .sinks import batch_overwrite_transport, effectively_once, parquet_transport
-from .sinks import webhook_foreach_batch, webhook_foreach_batch_v2
+from .sinks import batch_overwrite_transport, effectively_once, webhook_foreach_batch
 
 
 ROCKSDB_PROVIDER = (
@@ -89,29 +91,16 @@ def start_webhook_query(
     transport: Callable[[DataFrame, str], None] | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """At-least-once delivery of ``deduped`` through ``transport`` (parquet
-    under ``output_dir`` by default).  A new checkpoint gets one dedup state
-    partition per core, not one per shuffle partition: each state partition
-    writes delta and checksum files every batch, a fixed cost small batches
-    do not repay.  The width is fixed when the checkpoint is created."""
-    transport = transport or parquet_transport(output_dir)
-    return _start(deduped, webhook_foreach_batch(transport), checkpoint_dir, available_now)
-
-
-def start_webhook_query_v2(
-    deduped: DataFrame,
-    checkpoint_dir: str,
-    output_dir: str,
-    ledger_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Effectively-once variant: per-batch overwrite transport + a
-    delivery ledger keyed on batch id, so checkpoint-recovery replays
-    neither duplicate files nor re-POST delivered batches.  (The
-    reference is at-most-once — app.rb:229-234 — this strictly
-    strengthens it.)"""
+    """Effectively-once delivery of ``deduped`` through ``transport``
+    (``batch_overwrite_transport`` under ``output_dir`` by default).  The
+    delivery ledger is ``<checkpoint_dir>/delivered``, so deleting the
+    checkpoint clears it too.  A new checkpoint gets one dedup state
+    partition per core, not one per shuffle partition: each state
+    partition writes delta and checksum files every batch, a fixed cost
+    small batches do not repay.  The width is fixed when the checkpoint
+    is created."""
+    transport = transport or batch_overwrite_transport(output_dir)
     body = effectively_once(
-        webhook_foreach_batch_v2(batch_overwrite_transport(output_dir)),
-        ledger_dir,
+        webhook_foreach_batch(transport), os.path.join(checkpoint_dir, "delivered")
     )
     return _start(deduped, body, checkpoint_dir, available_now)

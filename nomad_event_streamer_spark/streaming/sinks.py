@@ -3,19 +3,23 @@
 The reference POSTs one webhook per event, sequentially, no retry
 (at-most-once; app.rb:229-234,258-262).  Here payload shaping is a pure
 projection (so it runs distributed) and delivery is a ``foreachBatch``
-that fans out each micro-batch to every destination — checkpointed, so
-the pipeline upgrades to at-least-once with idempotent keys
-(raft_index, task_identifier, event_type, event_time_ns).
+that fans out each micro-batch to every destination.  There is one
+delivery guarantee, effectively-once per batch id: the checkpointed
+offsets replay a failed batch, and ``effectively_once``'s ledger, kept
+inside the checkpoint, skips a replayed batch that was already
+delivered while still running it so its state commits.
 
-Delivery is injectable: the default "transport" appends to a parquet
-directory (the test/dev stand-in); ``http_transport`` POSTs each event
-from the driver, in order, over one keep-alive connection per
-destination and batch (stdlib ``http.client``).
+Delivery is injectable, and every transport is called as
+``(payloads, destination)``: ``batch_overwrite_transport`` writes one
+parquet partition per batch (the test/dev stand-in); ``http_transport``
+POSTs each event from the driver, in order, over one keep-alive
+connection per destination and batch (stdlib ``http.client``).
 """
 
 from __future__ import annotations
 
 import http.client
+import os
 from collections.abc import Callable
 from urllib.parse import urlsplit
 
@@ -103,15 +107,20 @@ def slack_payload(classified: DataFrame) -> DataFrame:
     )
 
 
-def parquet_transport(dest_dir: str) -> Callable[[DataFrame, str], None]:
-    """Default delivery: append payloads to a parquet dir per destination
-    (stand-in for the HTTP POST; swap for a requests-based sender in
-    production)."""
+def batch_overwrite_transport(dest_dir: str) -> Callable[[DataFrame, str], None]:
+    """File delivery (the test/dev stand-in for the HTTP POST): each
+    micro-batch lands in ``<dest_dir>/<destination>/batch_id=<n>/``.
+    The partition is overwritten, not appended to, so a replayed batch
+    rewrites its own files instead of adding duplicates."""
 
     def send(payloads: DataFrame, destination: str) -> None:
-        payloads.withColumn("destination", F.lit(destination)).write.mode(
-            "append"
-        ).parquet(f"{dest_dir}/{destination}")
+        (
+            payloads.withColumn("destination", F.lit(destination))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(f"{dest_dir}/{destination}")
+        )
 
     return send
 
@@ -139,11 +148,12 @@ def http_transport(
     one job; ``toLocalIterator`` would run one per partition.
 
     Delivery guarantee: no Spark task POSTs, so a task retry cannot
-    re-POST; but a ``foreachBatch`` replay after a failure re-POSTs the
-    whole batch, and a stale keep-alive reconnect can resend one
-    in-flight request — at-least-once per row.  Receivers must be
-    idempotent, or compose with ``effectively_once`` (its ledger skips
-    redelivered batches).  (The reference itself is fire-and-forget.)"""
+    re-POST, and ``effectively_once`` skips a replayed batch that was
+    already delivered.  Two windows remain in which a row is POSTed
+    twice: a crash after the POSTs but before the ledger marker, and a
+    stale keep-alive reconnect that resends one in-flight request.
+    Receivers that must never see a duplicate dedupe on the event key.
+    (The reference itself is fire-and-forget.)"""
 
     def send(payloads: DataFrame, destination: str) -> None:
         url = urls[destination]
@@ -223,6 +233,7 @@ _SHAPERS: dict[str, Callable[[DataFrame], DataFrame]] = {
 
 def _deliver_once(
     batch: DataFrame,
+    batch_id: int,
     destinations: tuple[str, ...],
     deliver: Callable[[DataFrame, str], None],
 ) -> None:
@@ -231,9 +242,10 @@ def _deliver_once(
     The batch is hash-partitioned by ``task_identifier`` into one
     partition per core, sorted by (raft_index, event_time_ns) within each
     partition, and cached.  Every destination's payload is a projection
-    of that cached frame, so the stateful plan behind ``batch`` (scan,
-    dedup, state-store commits) runs once per micro-batch instead of once
-    per destination, and per-task order survives the projection."""
+    of that cached frame plus a literal ``batch_id`` column, so the
+    stateful plan behind ``batch`` (scan, dedup, state-store commits)
+    runs once per micro-batch instead of once per destination, and
+    per-task order survives the projection."""
     frame = (
         batch.repartition(
             batch.sparkSession.sparkContext.defaultParallelism, "task_identifier"
@@ -243,7 +255,7 @@ def _deliver_once(
     )
     try:
         for dest in destinations:
-            deliver(_SHAPERS[dest](frame), dest)
+            deliver(_SHAPERS[dest](frame).withColumn("batch_id", F.lit(batch_id)), dest)
     finally:
         frame.unpersist()
 
@@ -262,67 +274,40 @@ def webhook_foreach_batch(
     POSTs, so a micro-batch starts no Python worker task."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        _deliver_once(batch, destinations, transport)
+        _deliver_once(batch, batch_id, destinations, transport)
 
     return process
 
 
-def batch_overwrite_transport(dest_dir: str) -> Callable[[DataFrame, str, int], None]:
-    """Replay-safe delivery: each micro-batch lands in its own
-    ``batch_id=<n>`` directory with overwrite semantics, so redelivering
-    a batch (recovery replay) rewrites the same files instead of
-    appending duplicates — idempotent per (destination, batch_id)."""
-
-    def send(payloads: DataFrame, destination: str, batch_id: int) -> None:
-        payloads.withColumn("destination", F.lit(destination)).write.mode(
-            "overwrite"
-        ).parquet(f"{dest_dir}/{destination}/batch_id={batch_id}")
-
-    return send
-
-
 def effectively_once(
-    process: Callable[[DataFrame, int], None], ledger_dir: str
+    process: Callable[[DataFrame, int], None], ledger: str
 ) -> Callable[[DataFrame, int], None]:
-    """Upgrade an at-least-once ``foreachBatch`` body to effectively-once
-    delivery: a per-batch ledger marker (written AFTER the body
-    completes) short-circuits replayed batch ids on recovery.
+    """Wrap a ``foreachBatch`` body so a batch id is delivered once: a
+    marker in the ``ledger`` directory, written after ``process``
+    returns, makes a replay of that batch id (checkpoint recovery after
+    a crash between delivery and Spark's commit) skip delivery.
 
-    The marker write is not atomic with delivery, so the body must be
-    idempotent per batch id for the composition to be exactly-once —
-    pair with ``batch_overwrite_transport`` (same-path overwrite) or an
-    HTTP receiver that dedupes on (batch_id, event key).  This exceeds
-    the reference's delivery contract (at-most-once, fire-and-forget
-    POST, app.rb:229-234,258-262).  ``foreachBatch`` runs on the driver;
-    in a cluster deployment the ledger dir lives on shared storage
-    (object store / DBFS), exactly like the checkpoint dir."""
-    import os
+    The skip still runs the batch, into the ``noop`` sink: a batch over
+    stateful operators must be consumed for their state to commit, and
+    a body that returns without reading it fails the query with
+    ``STATE_STORE_COMMIT_VALIDATION_FAILED`` (Spark 4.1).
 
-    os.makedirs(ledger_dir, exist_ok=True)
+    The marker is not written atomically with delivery, so a crash
+    between the two redelivers the batch: ``batch_overwrite_transport``
+    rewrites the same files; an HTTP receiver sees the batch twice.
+    ``start_webhook_query`` keeps the ledger inside the checkpoint, so
+    a new checkpoint never meets a stale ledger.  ``foreachBatch`` runs
+    on the driver; in a cluster deployment the checkpoint, and so the
+    ledger, lives on shared storage."""
+    os.makedirs(ledger, exist_ok=True)
 
     def wrapped(batch: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(ledger_dir, f"batch-{batch_id}.done")
+        marker = os.path.join(ledger, f"batch-{batch_id}.done")
         if os.path.exists(marker):
+            batch.write.format("noop").mode("overwrite").save()
             return
         process(batch, batch_id)
         with open(marker, "w", encoding="utf-8") as fh:
             fh.write("ok")
 
     return wrapped
-
-
-def webhook_foreach_batch_v2(
-    transport: Callable[[DataFrame, str, int], None],
-    destinations: tuple[str, ...] = ("discord", "slack"),
-) -> Callable[[DataFrame, int], None]:
-    """Like ``webhook_foreach_batch`` but the transport also receives the
-    batch id, enabling per-batch idempotent delivery paths."""
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        _deliver_once(
-            batch,
-            destinations,
-            lambda payloads, dest: transport(payloads, dest, batch_id),
-        )
-
-    return process

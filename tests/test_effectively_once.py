@@ -1,21 +1,95 @@
-"""Effectively-once delivery: batch-id ledger + per-batch overwrite
-transport make checkpoint-replayed batches harmless (strictly stronger
-than the reference's at-most-once fire-and-forget POST,
+"""Effectively-once delivery through ``start_webhook_query``: a batch-id
+ledger inside the checkpoint and the per-batch overwrite transport make
+a checkpoint-replayed batch harmless (strictly stronger than the
+reference's at-most-once fire-and-forget POST,
 app.rb:229-234,258-262)."""
 
+import os
+import shutil
+import threading
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
 import pyspark.sql.functions as F
+import pytest
 
 from nomad_event_streamer_spark.sources.synthetic import sample_stream
 from nomad_event_streamer_spark.streaming.runner import (
     build_stream,
     read_ndjson_stream,
-    start_webhook_query_v2,
+    start_webhook_query,
 )
 from nomad_event_streamer_spark.streaming.sinks import (
     batch_overwrite_transport,
     effectively_once,
-    webhook_foreach_batch_v2,
+    http_transport,
+    webhook_foreach_batch,
 )
+
+
+def _dupes(out) -> int:
+    return (
+        out.groupBy("task_identifier", "event_time_ns")
+        .count()
+        .where(F.col("count") > 1)
+        .count()
+    )
+
+
+def _input(tmp_path, envelopes: int) -> str:
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    (input_dir / "a.ndjson").write_text("\n".join(sample_stream(envelopes)) + "\n")
+    return str(input_dir)
+
+
+@pytest.fixture
+def receiver():
+    """A local webhook server: yields its URLs and the bodies POSTed to it."""
+    posts = []
+
+    class _Count(BaseHTTPRequestHandler):
+        def do_POST(self):  # noqa: N802 (http.server API)
+            posts.append(self.rfile.read(int(self.headers["Content-Length"])))
+            self.send_response(204)
+            self.end_headers()
+
+        def log_message(self, *args):
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), _Count)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield {d: f"http://127.0.0.1:{srv.server_port}/{d}" for d in ("discord", "slack")}, posts
+    srv.shutdown()
+    srv.server_close()
+
+
+def _files_and_posts(tmp_path, urls):
+    """A transport that writes the batch's files and POSTs it."""
+    files = batch_overwrite_transport(str(tmp_path / "out"))
+    post = http_transport(urls)
+
+    def send(payloads, destination):
+        files(payloads, destination)
+        post(payloads, destination)
+
+    return send
+
+
+def _run(spark, input_dir, tmp_path, transport=None):
+    q = start_webhook_query(
+        build_stream(read_ndjson_stream(spark, input_dir)),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        output_dir=str(tmp_path / "out"),
+        transport=transport,
+    )
+    q.awaitTermination(120)  # raises if the query failed
+    assert q.exception() is None
+    return q
+
+
+def _rows(spark, tmp_path):
+    out = spark.read.parquet(str(tmp_path / "out" / "discord"))
+    return sorted(out.collect()), _dupes(out)
 
 
 def test_ledger_skips_replayed_batch(tmp_path, spark):
@@ -35,14 +109,8 @@ def test_ledger_skips_replayed_batch(tmp_path, spark):
 def test_overwrite_transport_replay_no_duplicates(tmp_path, spark):
     """Delivering the same batch twice (crash between delivery and
     ledger write) rewrites the same files instead of appending."""
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    (input_dir / "a.ndjson").write_text("\n".join(sample_stream(4)) + "\n")
-    classified = build_stream(read_ndjson_stream(spark, str(input_dir)))
-
-    # run once through the streaming engine to produce a real batch,
-    # capturing the batch DataFrame contents via the transport
-    process = webhook_foreach_batch_v2(
+    classified = build_stream(read_ndjson_stream(spark, _input(tmp_path, 4)))
+    process = webhook_foreach_batch(
         batch_overwrite_transport(str(tmp_path / "out")),
         destinations=("discord",),
     )
@@ -58,37 +126,71 @@ def test_overwrite_transport_replay_no_duplicates(tmp_path, spark):
     q.awaitTermination(120)
 
     out = spark.read.parquet(str(tmp_path / "out" / "discord"))
-    dupes = (
-        out.groupBy("task_identifier", "event_time_ns")
-        .count()
-        .where(F.col("count") > 1)
-        .count()
-    )
-    assert out.count() > 0 and dupes == 0
+    assert out.count() > 0 and _dupes(out) == 0
 
 
-def test_end_to_end_v2_restart_no_duplicates(tmp_path, spark):
-    """Full v2 query, run twice over the same checkpoint (second start
+def test_end_to_end_restart_no_duplicates(tmp_path, spark):
+    """The starter run twice over the same checkpoint (the second start
     is the recovery/no-new-data case): output stays duplicate-free."""
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    (input_dir / "a.ndjson").write_text("\n".join(sample_stream(5)) + "\n")
-
+    input_dir = _input(tmp_path, 5)
     for _ in range(2):
-        stream = read_ndjson_stream(spark, str(input_dir))
-        q = start_webhook_query_v2(
-            build_stream(stream),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            output_dir=str(tmp_path / "out"),
-            ledger_dir=str(tmp_path / "ledger"),
-        )
-        q.awaitTermination(120)
+        _run(spark, input_dir, tmp_path)
 
     out = spark.read.parquet(str(tmp_path / "out" / "discord"))
-    dupes = (
-        out.groupBy("task_identifier", "event_time_ns")
-        .count()
-        .where(F.col("count") > 1)
-        .count()
-    )
-    assert out.count() > 0 and dupes == 0
+    assert out.count() > 0 and _dupes(out) == 0
+
+
+@pytest.mark.parametrize("crashed", ["last_batch", "last_batch_with_rows"])
+def test_replay_after_crash_before_commit_delivers_nothing(
+    tmp_path, spark, receiver, crashed
+):
+    """A crash after a batch's ledger marker but before Spark's commit:
+    the restart replays the batch from its offsets, skips its delivery
+    (no file rewritten twice, no POST) and still runs it, so the dedup
+    state commits.  A skip that returns without reading the batch fails
+    the restart with STATE_STORE_COMMIT_VALIDATION_FAILED.
+
+    ``last_batch`` drops the last commit, which is the no-data batch
+    that advances the watermark; ``last_batch_with_rows`` crashes in the
+    last batch that read input, so every later log entry goes too."""
+    input_dir = _input(tmp_path, 6)
+    urls, posts = receiver
+    transport = _files_and_posts(tmp_path, urls)
+    q = _run(spark, input_dir, tmp_path, transport)
+    delivered = len(posts)
+    rows, dupes = _rows(spark, tmp_path)
+    assert delivered > 0 and rows and dupes == 0
+
+    ckpt = tmp_path / "ckpt"
+    last = max(p["batchId"] for p in q.recentProgress)
+    n = last
+    if crashed == "last_batch_with_rows":
+        n = max(p["batchId"] for p in q.recentProgress if p["numInputRows"])
+        assert n < last
+    for b in range(n, last + 1):
+        # batch n keeps its offsets: it was planned when the crash came
+        for log in ["commits"] if b == n else ["commits", "offsets"]:
+            os.remove(ckpt / log / str(b))
+            os.remove(ckpt / log / f".{b}.crc")
+
+    replay = _run(spark, input_dir, tmp_path, transport)
+    assert replay.recentProgress[0]["batchId"] == n
+    assert len(posts) == delivered
+    assert _rows(spark, tmp_path) == (rows, 0)
+
+
+def test_checkpoint_reset_delivers_again(tmp_path, spark, receiver):
+    """The ledger lives in the checkpoint: deleting the checkpoint makes
+    the restart a new query, and its batch is delivered again."""
+    input_dir = _input(tmp_path, 6)
+    urls, posts = receiver
+    transport = _files_and_posts(tmp_path, urls)
+    _run(spark, input_dir, tmp_path, transport)
+    delivered = len(posts)
+    assert delivered > 0
+    assert os.listdir(tmp_path / "ckpt" / "delivered")
+
+    shutil.rmtree(tmp_path / "ckpt")
+    _run(spark, input_dir, tmp_path, transport)
+    assert len(posts) == 2 * delivered
+    assert sorted(posts[delivered:]) == sorted(posts[:delivered])

@@ -13,7 +13,6 @@ from nomad_event_streamer_spark.streaming.runner import (
     build_stream,
     read_ndjson_stream,
     start_webhook_query,
-    start_webhook_query_v2,
 )
 from nomad_event_streamer_spark.streaming.sinks import (
     discord_payload,
@@ -335,11 +334,11 @@ def test_batch_computed_once_and_delivered_per_core(tmp_path, spark):
 
 
 def test_state_width_per_core_on_new_checkpoints_only(tmp_path, spark):
-    """Both starters give a new checkpoint one dedup state partition per
-    core and hand the caller's shuffle width back once ``start()``
-    returns; a checkpoint created at another width restarts at that
-    width, and its state still drops envelopes replayed from before the
-    restart."""
+    """The starter, with a caller's transport or its own file transport,
+    gives a new checkpoint one dedup state partition per core and hands
+    the caller's shuffle width back once ``start()`` returns; a
+    checkpoint created at another width restarts at that width, and its
+    state still drops envelopes replayed from before the restart."""
     key = "spark.sql.shuffle.partitions"
     cores = spark.sparkContext.defaultParallelism
     shuffle = 3
@@ -359,16 +358,14 @@ def test_state_width_per_core_on_new_checkpoints_only(tmp_path, spark):
     before = spark.conf.get(key)
     spark.conf.set(key, str(shuffle))
     try:
-        starters = {
-            "v1": lambda ckpt: start_webhook_query(
-                stream(), ckpt, str(tmp_path / "out1"), transport=record
-            ),
-            "v2": lambda ckpt: start_webhook_query_v2(
-                stream(), ckpt, str(tmp_path / "out2"), str(tmp_path / "ledger")
-            ),
-        }
-        for name, start in starters.items():
-            q = start(str(tmp_path / f"ckpt_{name}"))
+        transports = {"record": record, "files": None}
+        for name, transport in transports.items():
+            q = start_webhook_query(
+                stream(),
+                str(tmp_path / f"ckpt_{name}"),
+                str(tmp_path / f"out_{name}"),
+                transport=transport,
+            )
             assert spark.conf.get(key) == str(shuffle)
             q.awaitTermination(120)
             assert q.exception() is None
