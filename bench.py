@@ -249,11 +249,11 @@ HEADLINE = [
     "q_perceptron_rounds",
     # round-12 additions: the second capped wedge consumer (replaces the
     # uncapped q_link_predict as the wedge family's tracked plan); the
-    # suffix-array family (7 prefix-doubling rank rounds over the token
-    # stream + the binary LCP walk — the corpus-scale members); and the
-    # unigram-LM EM round (the SentencePiece counterpart to q_bpe_train:
-    # one corpus pass + 24 unrolled vocab-scale DP rounds — tracked for
-    # the same round-count-bound reason as the BPE trainer)
+    # suffix-array family (one suffix-array pass, one bucketed global
+    # row number and the adjacent-pair LCPs — the corpus-scale member);
+    # and the unigram-LM EM round (the SentencePiece counterpart to
+    # q_bpe_train: one corpus pass + 24 unrolled vocab-scale DP rounds —
+    # tracked for the same round-count-bound reason as the BPE trainer)
     "q_adamic_adar_capped",
     "q_maximal_repeat",
     "q_unigram_lm_em",

@@ -57,17 +57,6 @@ def _fuse(syms: list, left: str, right: str) -> list:
     return res
 
 
-def _merge_udf(left: str, right: str):
-    """Arrow-batched rewrite fusing one (left, right) pair in-place.
-    Factory scope pins the pair values per training round."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def apply_merge(s: pd.Series) -> pd.Series:
-        return pd.Series([_fuse(syms, left, right) for syms in s])
-
-    return apply_merge
-
-
 def _batch_merge_udf(batch: list[tuple[str, str]]):
     """ONE Arrow pass applying an ordered batch of merges (optimization
     round 13).  The batch is produced by ``_safe_prefix`` so the merges

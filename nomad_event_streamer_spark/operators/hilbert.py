@@ -90,26 +90,6 @@ def hilbert_oracle_rounds(
     return ",\n    ".join(parts)
 
 
-def hilbert_index_py(x: int, y: int, order: int = 8) -> int:
-    """Pure-python referee (textbook xy2d) for tests — shares no code
-    with either engine path."""
-    n = 1 << order
-    rx = ry = 0
-    d = 0
-    s = n // 2
-    while s > 0:
-        rx = 1 if (x & s) > 0 else 0
-        ry = 1 if (y & s) > 0 else 0
-        d += s * s * ((3 * rx) ^ ry)
-        if ry == 0:
-            if rx == 1:
-                x = n - 1 - x
-                y = n - 1 - y
-            x, y = y, x
-        s //= 2
-    return d
-
-
 def write_hilbert_clustered(
     df: DataFrame,
     path: str,

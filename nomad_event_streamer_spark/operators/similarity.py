@@ -31,10 +31,10 @@ from pyspark.sql.types import DoubleType
 def cosine_batch(va: pd.Series, vb: pd.Series) -> pd.Series:
     """Arrow-vectorized cosine over paired embedding columns.
 
-    The HOF-fold formulation (_dot/_norm) runs interpreted per element —
-    fine for a handful of comparisons, ~10x too slow when scoring 10^5+
-    candidate pairs.  This batches whole Arrow record chunks through one
-    numpy einsum."""
+    The HOF-fold formulation (``_dot``-style ``aggregate`` folds) runs
+    interpreted per element — fine for a handful of comparisons, ~10x
+    too slow when scoring 10^5+ candidate pairs.  This batches whole
+    Arrow record chunks through one numpy einsum."""
     a = np.stack(va.to_numpy()).astype(np.float64)
     b = np.stack(vb.to_numpy()).astype(np.float64)
     num = np.einsum("ij,ij->i", a, b)
@@ -147,16 +147,6 @@ def _dot(a, b):
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
-    )
-
-
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
     )
 
 

@@ -1,25 +1,19 @@
-"""Distributed suffix ranking by prefix doubling (Manber & Myers 1993;
-Flick & Aluru, SC'15 "Parallel distributed memory construction of
-suffix and LCP arrays" — the standard bulk-synchronous suffix-array
-algorithm, which maps 1:1 onto DataFrame ops).
+"""Suffix ranking over direct suffix arrays, for exact-substring dedup
+(Lee et al. 2022 §4): every document suffix is carried as its token
+array, truncated at ``2^rounds`` tokens, so equal arrays are equal
+tails and rank-adjacent suffixes maximize the longest common prefix —
+the machinery maximal-repeat and exact-substring dedup need.
 
-Upgrades the ExactSubstr family (Lee et al. 2022 §4) from fixed-k
-shingle spans to TRUE suffix order: after ``rounds`` doubling steps the
-rank of every document suffix is the dense rank of its
-``2^rounds``-token prefix, so equal ranks = equal tails and
-rank-adjacent suffixes maximize the longest-common-prefix — the exact
-machinery maximal-repeat / exact-substring dedup needs.
+The ranks are the ones prefix doubling (Manber & Myers 1993; Flick &
+Aluru SC'15) reaches after ``rounds`` rounds; ``suffix_cte`` unrolls
+those rounds as the DuckDB oracle, and ``tests/test_round13_suffix.py``
+keeps a Spark doubling chain as the referee.  The direct form is exact
+only for documents of at most ``2^rounds`` tokens, which the suffix
+queries guard loudly (``plans/corpus_queries._suffix_guard``).
 
-Design for 100 TB:
-- One doubling round = one self equi-join on (doc_id, pos + 2^j)
-  (co-partitioned by doc) + one dense rank.  O(log maxlen) rounds
-  TOTAL — round count is bounded by document length, NOT corpus size.
-- Dense rank never runs a partitionless window: distinct pair classes
-  (vocabulary-scale after round 0, at most suffix-scale later) ride the
-  bucketed global-rank device (operators/ranking.py) and join back.
-- Rank vectors are integers ⇒ the DuckDB oracle unrolls the identical
-  rounds as chained CTEs with plain ``dense_rank()`` windows — full
-  hash gate despite the iterative algorithm.
+Design for 100 TB: one narrow pass over ``documents`` (split +
+posexplode + slice, no shuffle) feeding one bucketed global rank
+(``operators/ranking.py``, never a partitionless window).
 
 Reference parity: the reference pipeline (app.rb:1-278) has no text
 indexing at all; this is EXT surface for the LLM-dedup north star.
@@ -28,56 +22,37 @@ indexing at all; this is EXT surface for the LLM-dedup north star.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
-
-from . import ranking
+from pyspark.sql import DataFrame
 
 __all__ = [
-    "token_positions",
     "suffix_arrays",
     "suffix_array_bucket",
-    "suffix_rank_levels",
     "suffix_cte",
 ]
 
 
-def token_positions(docs: DataFrame) -> DataFrame:
-    """(doc_id, pos, tok) with 1-based positions (matches DuckDB's
-    ``generate_subscripts``)."""
-    return docs.select(
-        "doc_id",
-        F.posexplode(F.split("text", " ")).alias("p0", "tok"),
-    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "tok")
-
-
 def suffix_arrays(docs: DataFrame, rounds: int) -> DataFrame:
     """(doc_id, pos, sarr): every suffix's token array, truncated at
-    ``2^rounds`` tokens — the DIRECT form of the prefix-doubling key
-    (optimization round 13).
+    ``2^rounds`` tokens — the direct form of the prefix-doubling key.
 
-    Equivalence with ``suffix_rank_levels(toks, rounds)[-1]``:
-    lv[rounds] dense-ranks suffixes by their zero-PADDED ``2^rounds``-
-    token prefix under the chained pair order (r1, r2), which by
-    induction is the elementwise order of the padded token-rank
-    sequence with pad = 0 sorting below every real rank.  Spark's
-    array<string> ordering is exactly that order: elementwise by token
-    (rank order = token string order, dense_rank is order-preserving)
-    and a shorter array that is a prefix of a longer one sorts FIRST
-    (pad-0 semantics).  Equality classes also coincide (padded prefix
-    tuples are equal iff the truncated arrays are equal).  Therefore
-    ``global_dense_rank`` over ``sarr`` yields bit-identical ranks to
-    the doubling chain — pinned by tests/test_round13_suffix.py and the
-    unchanged ``suffix_cte`` oracle.
+    Equivalence with ``rounds`` doubling rounds: round ``rounds``
+    dense-ranks suffixes by their zero-PADDED ``2^rounds``-token prefix
+    under the chained pair order (r1, r2), which by induction is the
+    elementwise order of the padded token-rank sequence with pad = 0
+    sorting below every real rank.  Spark's array<string> ordering is
+    exactly that order: elementwise by token (rank order = token string
+    order, dense_rank is order-preserving) and a shorter array that is
+    a prefix of a longer one sorts FIRST (pad-0 semantics).  Equality
+    classes also coincide (padded prefix tuples are equal iff the
+    truncated arrays are equal).  Therefore ``global_dense_rank`` over
+    ``sarr`` yields bit-identical ranks to the doubling chain — pinned
+    by tests/test_round13_suffix.py and the ``suffix_cte`` oracle.
 
-    Why this form wins for this data model (docs <= 2^rounds tokens):
-    the doubling chain runs O(log maxlen) window+rank rounds, ~5
-    shuffles each, over the suffix table; this is ONE narrow pass over
-    ``documents`` (split + posexplode + slice — no shuffle) feeding a
-    single bucketed rank.  Bytes per shuffled row grow from one long to
-    a <= 2^rounds-token array (~L/2 tokens on average), but the shuffle
-    COUNT drops ~13x and every inter-round barrier disappears.  For
-    corpora of LONG documents (2^rounds << doc length) the doubling
-    chain below remains the right shape — N·log L bytes beats N·L."""
+    Cost: one narrow pass over ``documents`` (split + posexplode +
+    slice, no shuffle) feeding a single bucketed rank.  A shuffled row
+    carries a <= 2^rounds-token array (~L/2 tokens on average) where a
+    doubling round carries one long, but the O(log L) window+rank
+    rounds, ~5 shuffles each, and their barriers are gone."""
     cap = 1 << rounds
     return docs.select(
         "doc_id", F.split("text", " ").alias("__arr")
@@ -108,75 +83,10 @@ def suffix_array_bucket(col) -> "F.Column":
     )
 
 
-def suffix_rank_levels(toks: DataFrame, rounds: int) -> list[DataFrame]:
-    """All prefix-doubling levels ``lv[j]``: (doc_id, pos, r) where r is
-    the corpus-wide dense rank of the ``2^j``-token (zero-padded)
-    prefix of the suffix at (doc_id, pos).  ``lv[rounds]`` is the final
-    suffix rank, exact for documents up to ``2^rounds`` tokens.
-
-    NOTE (optimization round 13): the registered queries now use
-    ``suffix_arrays`` + one ``global_dense_rank`` (bit-identical ranks,
-    see its docstring) because this data model bounds documents at
-    2^rounds tokens.  This doubling chain stays as the LONG-document
-    form (N·log L shuffle bytes vs the array form's N·L) and as the
-    referee for the equivalence test.
-
-    Execution (optimization round 12; ranks are unchanged — the oracle
-    CTE chain in ``suffix_cte`` is the same):
-
-    - The per-round ``(doc_id, pos + 2^j)`` self-join became a
-      ``lead(r, 2^j)`` window over (doc_id, pos): positions are DENSE
-      1..n per document (posexplode), so lead-by-h IS the rank at
-      pos + h, with 0 beyond the end — two full-table shuffles per
-      round gone (guide §2.4).
-    - Dense ranks ride ``ranking.global_dense_rank`` (one bucketed
-      window + a distinct-count offset table) instead of distinct +
-      rank + token-scale join-back, bucketed by ``bitlen_subbucket`` so
-      the top bucket holds ~1/32 of the rank space, not half.
-    - Levels are localCheckpointed LAZILY (eager=False): lineage is
-      still cut (level j feeds level j+1 and the binary LCP walk,
-      which probes every level), but all levels materialize inside the
-      consumer's ONE job with stage-level parallelism instead of
-      ``rounds`` serialized driver-blocking jobs."""
-    lv = (
-        ranking.global_dense_rank(
-            toks,
-            ["tok"],
-            F.substring("tok", 1, 1),
-            "r",
-        )
-        .select("doc_id", "pos", F.col("r").cast("long").alias("r"))
-        .localCheckpoint(eager=False)
-    )
-    levels = [lv]
-    for j in range(rounds):
-        h = 1 << j
-        w_doc = Window.partitionBy("doc_id").orderBy(F.col("pos").asc())
-        paired = lv.select(
-            "doc_id",
-            "pos",
-            F.col("r").alias("r1"),
-            F.coalesce(F.lead("r", h).over(w_doc), F.lit(0))
-            .cast("long")
-            .alias("r2"),
-        )
-        lv = (
-            ranking.global_dense_rank(
-                paired,
-                ["r1", "r2"],
-                ranking.bitlen_subbucket(F.col("r1")),
-                "r",
-            )
-            .select("doc_id", "pos", F.col("r").cast("long").alias("r"))
-            .localCheckpoint(eager=False)
-        )
-        levels.append(lv)
-    return levels
-
-
 def suffix_cte(rounds: int) -> str:
-    """DuckDB CTE chain mirroring ``suffix_rank_levels`` exactly:
-    ``t`` (token positions), ``lv0`` .. ``lv{rounds}``.  Callers append
+    """DuckDB CTE chain of the prefix-doubling ranks: ``t`` (token
+    positions), ``lv0`` .. ``lv{rounds}``, where ``lv{j}`` dense-ranks
+    each suffix by its zero-padded ``2^j``-token prefix.  Callers append
     their own consuming CTEs / SELECT."""
     parts = [
         """t AS (

@@ -4786,8 +4786,8 @@ def q_audio_vad_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Suffix ranking by prefix doubling (round 12, VERDICT r11 item #6a):
-# the true-suffix-order upgrade of the ExactSubstr family
+# Suffix ranking (round 12, VERDICT r11 item #6a): the true-suffix-order
+# upgrade of the ExactSubstr family
 # ---------------------------------------------------------------------------
 
 # 2^7 = 128 >= the 100-token document bound of this data model (TESTDATA
@@ -4844,34 +4844,30 @@ def _suffix_guard(docs) -> None:
     """,
 )
 def q_suffix_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SUFFIX RANKING by prefix doubling (Manber & Myers 1993; Flick &
-    Aluru SC'15 — operators/suffix.py): the dense rank of every
-    document suffix in true corpus-wide suffix order, exact for the
-    data model's <=100-token documents after 7 doubling rounds (loud
+    """SUFFIX RANKING (operators/suffix.py): the dense rank of every
+    document suffix in true corpus-wide suffix order — the rank prefix
+    doubling (Manber & Myers 1993; Flick & Aluru SC'15) reaches after 7
+    rounds, exact for the data model's <=100-token documents (loud
     guard).  Emitted surface: the top-10 DUPLICATE-TAIL classes (equal
     final rank = byte-equal suffix tails, the ExactSubstr signal) with
     class size and first occurrence, plus total/distinct suffix counts
     — upgrade of the fixed-k shingle spans to unbounded-length exact
     tails.
 
-    Engine exactness: ranks are dense ranks of integer pairs (round 0:
-    ASCII tokens, binary order in both engines), so every level is
-    hash-identical; the oracle unrolls the same 7 rounds as CTE
-    dense_rank windows.
+    Engine exactness: the oracle unrolls the 7 doubling rounds as CTE
+    dense_rank windows over integer pairs (round 0: ASCII tokens,
+    binary order in both engines); the Spark side ranks each suffix's
+    token array, whose prefix-first order is bit-identical to the
+    padded doubling order (``suffix_arrays``, referee-pinned).
 
-    Scale (optimization round 13): because this data model bounds
-    documents at 2^rounds tokens, the 7 doubling rounds collapse into
-    ONE narrow pass building each suffix's token array (split +
-    posexplode + slice — no shuffle, operators/suffix.py
-    suffix_arrays: the array prefix-first order is bit-identical to
-    the padded doubling-chain order, referee-pinned), ONE class
-    aggregation on the arrays (count + min gid per distinct tail —
-    the only array-keyed shuffle), and ONE bucketed global row number
-    over the DISTINCT-CLASS table, where each class's row number IS
-    its dense rank.  The per-position rank table is never built; ~40
-    chained level shuffles became 2.  The ranked class table is cut
-    EAGERLY (ints only): tot and top-10 consume it through concurrent
-    branches (r12 classification rule)."""
+    Scale: ONE narrow pass building each suffix's token array (split +
+    posexplode + slice — no shuffle), ONE class aggregation on the
+    arrays (count + min gid per distinct tail — the only array-keyed
+    shuffle), and ONE bucketed global row number over the
+    DISTINCT-CLASS table, where each class's row number IS its dense
+    rank.  The per-position rank table is never built.  The ranked
+    class table is cut EAGERLY (ints only): tot and top-10 consume it
+    through concurrent branches (r12 classification rule)."""
     docs = rebalance_for_cpu(load(spark, sf_dir, "documents"))
     _suffix_guard(docs)
     suf = _suffix.suffix_arrays(docs, _SUFFIX_ROUNDS)
@@ -4974,18 +4970,19 @@ def _suffix_lcp_pairs(spark: SparkSession, sf_dir: str):
     capped LCPs of every rank-adjacent suffix pair — the shared
     scaffold of the maximal-repeat and repeat-profile consumers.
 
-    Optimization round 13: with documents bounded at 2^rounds tokens,
-    the suffix ORDER comes from one global row number over the direct
-    suffix arrays (order-isomorphic to the oracle's lv{rounds} ranks,
-    so ``row_number OVER (ORDER BY r, doc_id, pos)`` = row_number over
+    With documents bounded at 2^rounds tokens, the suffix ORDER comes
+    from one global row number over the direct suffix arrays
+    (order-isomorphic to the oracle's lv{rounds} ranks, so
+    ``row_number OVER (ORDER BY r, doc_id, pos)`` = row_number over
     (sarr, doc_id, pos)), and the LCP of each adjacent pair is the
-    plain longest-common-prefix of the two arrays — computed in one
-    codegen zip_with/array_position expression instead of the 7-level
-    binary walk (14 suffix-table joins gone).  The walk's padded-rank
-    equality is real token equality inside both tails and its final
-    ``least(lcp, tail_a, tail_b)`` cap clamps any padding overshoot,
-    so walk-LCP == array-LCP exactly (referee: tests/test_round12_ops
-    TestSuffixReferee.test_maximal_repeat_lcp, plus fuzz_families/suffix.py)."""
+    plain longest-common-prefix of the two arrays — one codegen
+    zip_with/array_position expression, where the oracle runs the
+    7-level binary walk.  The walk's padded-rank equality is real token
+    equality inside both tails and its final ``least(lcp, tail_a,
+    tail_b)`` cap clamps any padding overshoot, so walk-LCP ==
+    array-LCP exactly (referees: tests/test_round13_suffix.py,
+    tests/test_round12_ops.py TestSuffixReferee, and
+    fuzz_families/suffix.py)."""
     docs = rebalance_for_cpu(load(spark, sf_dir, "documents"))
     _suffix_guard(docs)
     suf = _suffix.suffix_arrays(docs, _SUFFIX_ROUNDS)
@@ -5029,22 +5026,20 @@ def _suffix_lcp_pairs(spark: SparkSession, sf_dir: str):
 
 @query("q_maximal_repeat", oracle=_maximal_repeat_oracle())
 def q_maximal_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MAXIMAL REPEATS via the suffix array + binary LCP walk
-    (Kärkkäinen & Sanders 2003 §5 applied to the prefix-doubling rank
-    tables): the top-10 longest repeated token substrings in the corpus
-    — each reported as the LCP of a rank-ADJACENT suffix pair, which is
-    sufficient because in suffix order the longest repeat is always
+    """MAXIMAL REPEATS via the suffix array + adjacent-pair LCPs
+    (Kärkkäinen & Sanders 2003 §5): the top-10 longest repeated token
+    substrings in the corpus — each reported as the LCP of a
+    rank-ADJACENT suffix pair, which is sufficient because in suffix order the longest repeat is always
     realized by some adjacent pair.  This is Lee et al. 2022's actual
     ExactSubstr machinery (their suffix-array clusters) with unbounded
     match length, where q_exactsubstr_cut approximates via fixed-k
     shingles.
 
-    LCP of each adjacent pair (optimization round 13): documents are
-    bounded at 2^rounds tokens, so each suffix's token array is carried
-    whole and the LCP is ONE codegen zip_with/array_position expression
-    over the adjacent pair — replacing the 7-level descending binary
-    walk (14 suffix-scale joins) the long-document form needs; the
-    result is the identical capped LCP (referee- and oracle-pinned).
+    LCP of each adjacent pair: documents are bounded at 2^rounds tokens,
+    so each suffix's token array is carried whole and the LCP is ONE
+    codegen zip_with/array_position expression over the adjacent pair;
+    the oracle's 7-level binary walk over the doubling ranks gives the
+    identical capped LCP (referee- and oracle-pinned).
 
     Scale: one narrow suffix-array pass + one bucketed global row
     number + one rn-keyed adjacency join (no partitionless window);

@@ -150,7 +150,7 @@ def http_transport(
     Delivery guarantee: no Spark task POSTs, so a task retry cannot
     re-POST, and ``effectively_once`` skips a replayed batch that was
     already delivered.  Two windows remain in which a row is POSTed
-    twice: a crash after the POSTs but before the ledger marker, and a
+    twice: a crash after the POSTs but before the ledger record, and a
     stale keep-alive reconnect that resends one in-flight request.
     Receivers that must never see a duplicate dedupe on the event key.
     (The reference itself is fire-and-forget.)"""
@@ -282,17 +282,20 @@ def webhook_foreach_batch(
 def effectively_once(
     process: Callable[[DataFrame, int], None], ledger: str
 ) -> Callable[[DataFrame, int], None]:
-    """Wrap a ``foreachBatch`` body so a batch id is delivered once: a
-    marker in the ``ledger`` directory, written after ``process``
-    returns, makes a replay of that batch id (checkpoint recovery after
-    a crash between delivery and Spark's commit) skip delivery.
+    """Wrap a ``foreachBatch`` body so a batch id is delivered once: the
+    ``ledger`` directory holds one record, the highest batch id whose
+    ``process`` returned, and a replay of any batch id at or below it
+    (checkpoint recovery after a crash between delivery and Spark's
+    commit) skips delivery.  Batch ids only grow, so one record is the
+    whole ledger; it is rewritten through a temp file and
+    ``os.replace``, so a crash mid-write leaves the old record whole.
 
     The skip still runs the batch, into the ``noop`` sink: a batch over
     stateful operators must be consumed for their state to commit, and
     a body that returns without reading it fails the query with
     ``STATE_STORE_COMMIT_VALIDATION_FAILED`` (Spark 4.1).
 
-    The marker is not written atomically with delivery, so a crash
+    The record is not written atomically with delivery, so a crash
     between the two redelivers the batch: ``batch_overwrite_transport``
     rewrites the same files; an HTTP receiver sees the batch twice.
     ``start_webhook_query`` keeps the ledger inside the checkpoint, so
@@ -300,14 +303,20 @@ def effectively_once(
     on the driver; in a cluster deployment the checkpoint, and so the
     ledger, lives on shared storage."""
     os.makedirs(ledger, exist_ok=True)
+    record = os.path.join(ledger, "last")
 
     def wrapped(batch: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(ledger, f"batch-{batch_id}.done")
-        if os.path.exists(marker):
+        try:
+            with open(record, encoding="utf-8") as fh:
+                delivered = int(fh.read())
+        except FileNotFoundError:
+            delivered = -1
+        if batch_id <= delivered:
             batch.write.format("noop").mode("overwrite").save()
             return
         process(batch, batch_id)
-        with open(marker, "w", encoding="utf-8") as fh:
-            fh.write("ok")
+        with open(record + ".tmp", "w", encoding="utf-8") as fh:
+            fh.write(str(batch_id))
+        os.replace(record + ".tmp", record)
 
     return wrapped

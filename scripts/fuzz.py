@@ -13,7 +13,7 @@ what is its own:
   and raises on any disagreement.  It may return a dict of tags, which
   the summary counts as ``by_<tag>``;
 - optionally ``setup(run)``, whose result every seed sees as
-  ``run.state``, and ``RECYCLE``, a session restart every that many seeds.
+  ``run.state``.
 
 Everything else lives here: the repo root, the session
 (``session.get_spark``), the DuckDB connection and the oracle comparison
@@ -189,12 +189,6 @@ class Run:
             shutil.rmtree(d, ignore_errors=True)
         self._scratch = []
 
-    def restart(self) -> None:
-        if self._own and self._spark is not None:
-            self._spark.stop()
-            self._spark = None
-            self.state, self._setup_done = None, False
-
     def close(self) -> None:
         self._end_seed()
         if self._con is not None:
@@ -222,12 +216,9 @@ class Run:
     def go(self, seeds) -> dict:
         """Check the given seeds; return the family's summary."""
         seeds = list(seeds)
-        recycle = getattr(self.fam, "RECYCLE", 0)
         failures: list[dict] = []
         tally: dict[str, Counter] = {}
         for i, (seed, case) in enumerate(self.cases(seeds)):
-            if recycle and seed and seed % recycle == 0:
-                self.restart()
             try:
                 if not self._setup_done:
                     if hasattr(self.fam, "setup"):

@@ -3,11 +3,12 @@ the graph family): q_suffix_rank, q_maximal_repeat, q_repeat_profile
 across corpus SHAPES the fixed sf fixtures never produce — THREE
 independent implementations per seed (the graph family's pattern):
 
-1. the REAL registered queries (prefix-doubling rank rounds + the
-   binary LCP walk, operators/suffix.py) over a synthesized documents
-   table,
-2. the registered DuckDB oracles (unrolled dense_rank CTE chains) over
-   the SAME parquet,
+1. the REAL registered queries (direct suffix arrays ranked by one
+   bucketed global rank, and the zip_with LCP of adjacent arrays,
+   operators/suffix.py) over a synthesized documents table,
+2. the registered DuckDB oracles (prefix doubling unrolled as
+   dense_rank CTE chains, plus the binary LCP walk) over the SAME
+   parquet,
 3. a pure-Python referee: materialize every suffix tail, sort, dense
    rank, and take TRUE common-prefix lengths of adjacent pairs —
    shares no engine code, no doubling, no SQL.
@@ -43,13 +44,6 @@ from collections import defaultdict
 
 SF = "/root/testdata/sf0.001"
 SEED_BASE = 12700
-# The suffix operators localCheckpoint all 8 doubling levels per query;
-# over many seeds the checkpoint blocks outlive their Python references
-# faster than the ContextCleaner drains them and the driver heap OOMs
-# (observed at ~70 seeds on a 1g heap).  A 6g heap (the harness session
-# has 8g) plus a session restart every RECYCLE seeds bounds the block
-# population deterministically.
-RECYCLE = 25
 REPEAT_L = 8  # q_repeat_profile's duplicated-position threshold
 CAP = 128  # 2^_SUFFIX_ROUNDS
 SLUGS = ("q_suffix_rank", "q_maximal_repeat", "q_repeat_profile")

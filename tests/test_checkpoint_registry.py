@@ -45,7 +45,6 @@ EXPECTED = {
     "operators/graph.py::louvain_level0": ["lazy", "lazy"],
     "operators/graph.py::pagerank": ["lazy", "lazy", "lazy"],
     "operators/graph.py::triangles": ["eager", "eager"],
-    "operators/suffix.py::suffix_rank_levels": ["lazy", "lazy"],
     "plans/advanced.py::q_label_prop": ["eager", "lazy"],
     "plans/analytics_queries.py::q_decile_lift": ["lazy"],
     "plans/analytics_queries.py::q_fleiss_kappa": ["eager"],

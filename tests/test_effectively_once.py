@@ -106,6 +106,24 @@ def test_ledger_skips_replayed_batch(tmp_path, spark):
     assert calls == [7, 8]
 
 
+def test_ledger_keeps_one_record(tmp_path, spark):
+    """The ledger holds one record however many batches ran, and a
+    replay of an older batch id is still skipped."""
+    calls = []
+
+    def body(batch, batch_id):
+        calls.append(batch_id)
+
+    ledger = tmp_path / "ledger"
+    wrapped = effectively_once(body, str(ledger))
+    df = spark.range(3)
+    for batch_id in range(4):
+        wrapped(df, batch_id)
+    wrapped(df, 2)  # replay of a batch older than the newest
+    assert calls == [0, 1, 2, 3]
+    assert len(os.listdir(ledger)) == 1
+
+
 def test_overwrite_transport_replay_no_duplicates(tmp_path, spark):
     """Delivering the same batch twice (crash between delivery and
     ledger write) rewrites the same files instead of appending."""

@@ -11,6 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from nomad_event_streamer_spark.plans import ORACLES, QUERIES
+from scripts.fuzz_families import suffix as suffix_family
 
 SF = "/root/testdata/sf0.001"
 
@@ -154,67 +155,22 @@ def _corpus_tokens(spark):
 
 
 class TestSuffixReferee:
-    """Pure-Python suffix-array referee (shares no engine code, no SQL):
-    brute-force sort of all (doc, pos) tails under (tail, doc, pos)."""
+    """The suffix family's pure-Python referee (shares no engine code,
+    no SQL: every suffix tail materialized and sorted, true LCPs of
+    neighbors) on the sf0.001 documents, against every column of the
+    three registered suffix queries."""
 
-    @staticmethod
-    def _sorted_suffixes(toks):
-        sufs = []
-        for d, ts in toks.items():
-            for p in range(1, len(ts) + 1):
-                sufs.append((tuple(ts[p - 1:]), d, p))
-        sufs.sort()
-        return sufs
+    def test_queries_match_referee(self, spark):
+        import pandas as pd
 
-    def test_duplicate_tail_classes(self, spark):
-        toks = _corpus_tokens(spark)
-        sufs = self._sorted_suffixes(toks)
-        from collections import Counter
-
-        classes = Counter(t for t, _, _ in sufs)
-        min_gid = {}
-        for t, d, p in sufs:
-            gid = d * 1000 + p
-            if t not in min_gid or gid < min_gid[t]:
-                min_gid[t] = gid
-        # engine emits top-10 by (n_suffixes DESC, rank ASC); rank order
-        # = tail order, so the referee sorts ties by tail
-        want = sorted(
-            ((n, t) for t, n in classes.items()),
-            key=lambda x: (-x[0], x[1]),
-        )[:10]
-        got = (
-            QUERIES["q_suffix_rank"](spark, SF)
-            .orderBy("rnk")
-            .collect()
+        docs = pd.read_parquet(f"{SF}/documents.parquet")
+        ref = suffix_family.referee(
+            [(int(d), t) for d, t in zip(docs.doc_id, docs.text)]
         )
-        assert got[0]["n_total"] == len(sufs)
-        assert got[0]["n_classes"] == len(classes)
-        for row, (n, t) in zip(got, want):
-            assert row["n_suffixes"] == n
-            assert row["min_gid"] == min_gid[t]
-
-    def test_maximal_repeat_lcp(self, spark):
-        toks = _corpus_tokens(spark)
-        sufs = self._sorted_suffixes(toks)
-        pairs = []
-        for (ta, da, pa), (tb, db, pb) in zip(sufs, sufs[1:]):
-            lcp = 0
-            for x, y in zip(ta, tb):
-                if x != y:
-                    break
-                lcp += 1
-            pairs.append((lcp, da, pa, db, pb))
-        want = sorted(pairs, key=lambda r: (-r[0], r[1], r[2], r[3], r[4]))[
-            :10
-        ]
-        got = [
-            (r["lcp"], r["doc_a"], r["pos_a"], r["doc_b"], r["pos_b"])
-            for r in QUERIES["q_maximal_repeat"](spark, SF)
-            .orderBy("rnk")
-            .collect()
-        ]
-        assert got == want
+        for slug in suffix_family.SLUGS:
+            cols = suffix_family.REFEREE_COLS[slug]
+            got = QUERIES[slug](spark, SF).select(*cols).collect()
+            assert sorted(map(tuple, got)) == sorted(ref[slug]), slug
 
 
 class TestUnigramReferee:
@@ -306,44 +262,6 @@ class TestUnigramReferee:
                 vocab[p],
                 n,
             )
-
-
-class TestSuffixConsumersReferee:
-    """Referees for the two late round-12 consumers (R13_QUEUE)."""
-
-    def test_repeat_profile(self, spark):
-        toks = _corpus_tokens(spark)
-        sufs = TestSuffixReferee._sorted_suffixes(toks)
-        from collections import defaultdict
-
-        nlcp = defaultdict(int)
-        for (ta, da, pa), (tb, db, pb) in zip(sufs, sufs[1:]):
-            lcp = 0
-            for x, y in zip(ta, tb):
-                if x != y:
-                    break
-                lcp += 1
-            nlcp[(da, pa)] = max(nlcp[(da, pa)], lcp)
-            nlcp[(db, pb)] = max(nlcp[(db, pb)], lcp)
-        want = {}
-        for d, ts in toks.items():
-            vals = [nlcp[(d, p)] for p in range(1, len(ts) + 1)]
-            want[d] = (
-                len(ts),
-                sum(1 for v in vals if v >= 8),
-                max(vals) if vals else 0,
-                sum(vals),
-            )
-        got = {
-            r["doc_id"]: (
-                r["n_pos"],
-                r["n_dup_pos"],
-                r["max_lcp"],
-                r["lcp_mass"],
-            )
-            for r in QUERIES["q_repeat_profile"](spark, SF).collect()
-        }
-        assert got == want
 
     def test_unigram_token_count(self, spark):
         toks = _corpus_tokens(spark)

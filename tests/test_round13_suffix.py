@@ -1,18 +1,23 @@
 """Round-13 optimization pins: the direct suffix-array form
 (operators/suffix.py suffix_arrays + one bucketed global rank + the
 zip_with LCP) must be bit-identical to the prefix-doubling chain it
-replaced (suffix_rank_levels + the 7-level binary walk).
+replaced.
 
-The doubling chain stays in the package as the long-document form and
-serves as the referee here; a pure-Python brute force referees both.
+The doubling chain lives here as the referee (``_suffix_rank_levels``);
+a pure-Python brute force referees both.
 """
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
+import pytest
+from pyspark.sql import DataFrame, Window
 
 from nomad_event_streamer_spark.operators import ranking
 from nomad_event_streamer_spark.operators import suffix as sfx
+from nomad_event_streamer_spark.plans import QUERIES
 
 # Deliberately nasty corpus: duplicate documents (every suffix class
 # multiply occupied), one doc a prefix of another (pad ordering), deep
@@ -32,6 +37,48 @@ _DOCS = [
 ]
 
 
+def _token_positions(docs: DataFrame) -> DataFrame:
+    """(doc_id, pos, tok) with 1-based positions (matches DuckDB's
+    ``generate_subscripts``)."""
+    return docs.select(
+        "doc_id",
+        F.posexplode(F.split("text", " ")).alias("p0", "tok"),
+    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "tok")
+
+
+def _suffix_rank_levels(toks: DataFrame, rounds: int) -> list[DataFrame]:
+    """Prefix doubling (Manber & Myers 1993; Flick & Aluru SC'15), the
+    Spark twin of ``suffix_cte``: all levels ``lv[j]``: (doc_id, pos, r)
+    where r is the corpus-wide dense rank of the ``2^j``-token
+    (zero-padded) prefix of the suffix at (doc_id, pos).  ``lv[rounds]``
+    is the final suffix rank, exact for documents up to ``2^rounds``
+    tokens.
+
+    Positions are dense 1..n per document (posexplode), so
+    ``lead(r, 2^j)`` over (doc_id, pos) is the rank at pos + 2^j, with
+    0 beyond the end.  Dense ranks ride ``ranking.global_dense_rank``,
+    bucketed by ``bitlen_subbucket`` after round 0."""
+    lv = ranking.global_dense_rank(
+        toks, ["tok"], F.substring("tok", 1, 1), "r"
+    ).select("doc_id", "pos", F.col("r").cast("long").alias("r"))
+    levels = [lv]
+    w_doc = Window.partitionBy("doc_id").orderBy(F.col("pos").asc())
+    for j in range(rounds):
+        paired = lv.select(
+            "doc_id",
+            "pos",
+            F.col("r").alias("r1"),
+            F.coalesce(F.lead("r", 1 << j).over(w_doc), F.lit(0))
+            .cast("long")
+            .alias("r2"),
+        )
+        lv = ranking.global_dense_rank(
+            paired, ["r1", "r2"], ranking.bitlen_subbucket(F.col("r1")), "r"
+        ).select("doc_id", "pos", F.col("r").cast("long").alias("r"))
+        levels.append(lv)
+    return levels
+
+
 def _brute_final_ranks():
     """(doc, pos) -> dense rank of the suffix tail under (tail) order,
     tails truncated at 2^_ROUNDS tokens, shorter-prefix-first."""
@@ -47,10 +94,10 @@ def _brute_final_ranks():
 
 def test_suffix_arrays_rank_matches_doubling_chain(spark):
     docs = spark.createDataFrame(_DOCS, "doc_id long, text string")
-    toks = sfx.token_positions(docs)
+    toks = _token_positions(docs)
     old = {
         (r["doc_id"], r["pos"]): r["r"]
-        for r in sfx.suffix_rank_levels(toks, _ROUNDS)[-1].collect()
+        for r in _suffix_rank_levels(toks, _ROUNDS)[-1].collect()
     }
     suf = sfx.suffix_arrays(docs, _ROUNDS)
     new = {
@@ -120,3 +167,42 @@ def test_zipwith_lcp_matches_brute_force(spark):
             lcp += 1
         want[(da, pa, db, pb)] = lcp
     assert got == want
+
+
+# Plan-shape budget of the two LCP consumers, neither of which has a
+# checkpoint cut, so the whole plan is visible: Window nodes, shuffle
+# exchanges the operators require (the per-scan round-robin rebalance
+# exchanges follow the scan count) and scans of ``documents``, counted in
+# the physical plan at sf0.001.  Ranking through the doubling chain, or
+# another pass over the suffix table, exceeds it.
+_PLAN_BUDGET = {
+    "q_maximal_repeat": {"Window": 5, "Exchange": 6, "documents": 4},
+    "q_repeat_profile": {"Window": 8, "Exchange": 15, "documents": 9},
+}
+
+
+def _plan_counts(df: DataFrame) -> dict:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = [
+        (m.group(1), line)
+        for line in plan.splitlines()
+        if (m := re.match(r"^[\s:|+-]*(\w+)", line))
+    ]
+    return {
+        "Window": sum(n == "Window" for n, _ in nodes),
+        "Exchange": sum(
+            n == "Exchange" and "ENSURE_REQUIREMENTS" in line
+            for n, line in nodes
+        ),
+        "documents": sum(
+            n == "FileScan" and "documents.parquet" in line
+            for n, line in nodes
+        ),
+    }
+
+
+@pytest.mark.parametrize("slug", sorted(_PLAN_BUDGET))
+def test_lcp_consumer_plan_budget(spark, sf_dir, slug):
+    got = _plan_counts(QUERIES[slug](spark, sf_dir))
+    budget = _PLAN_BUDGET[slug]
+    assert all(got[k] <= budget[k] for k in budget), (got, budget)

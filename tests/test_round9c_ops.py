@@ -14,13 +14,32 @@ import pyspark.sql.functions as F
 
 from nomad_event_streamer_spark.operators.hilbert import (
     hilbert_expr,
-    hilbert_index_py,
     write_hilbert_clustered,
 )
 from nomad_event_streamer_spark.plans import QUERIES
 from nomad_event_streamer_spark.tables import load
 
 SF = "/root/testdata/sf0.001"
+
+
+def _hilbert_index_py(x: int, y: int, order: int = 8) -> int:
+    """Pure-python referee (textbook xy2d) — shares no code with either
+    engine path."""
+    n = 1 << order
+    rx = ry = 0
+    d = 0
+    s = n // 2
+    while s > 0:
+        rx = 1 if (x & s) > 0 else 0
+        ry = 1 if (y & s) > 0 else 0
+        d += s * s * ((3 * rx) ^ ry)
+        if ry == 0:
+            if rx == 1:
+                x = n - 1 - x
+                y = n - 1 - y
+            x, y = y, x
+        s //= 2
+    return d
 
 
 class TestHilbertIndex:
@@ -34,7 +53,7 @@ class TestHilbertIndex:
             ).collect()
         }
         for (x, y), d in got.items():
-            assert d == hilbert_index_py(x, y, 8), (x, y)
+            assert d == _hilbert_index_py(x, y, 8), (x, y)
 
     def test_bijective_and_curve_adjacent_order4(self, spark):
         """The two properties that make Hilbert better than Morton:
@@ -42,7 +61,7 @@ class TestHilbertIndex:
         positions are grid neighbors — Morton violates this at every
         quadrant seam)."""
         ref = {
-            (x, y): hilbert_index_py(x, y, 4)
+            (x, y): _hilbert_index_py(x, y, 4)
             for x in range(16)
             for y in range(16)
         }

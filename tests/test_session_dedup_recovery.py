@@ -11,7 +11,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 import time
 import uuid
 
@@ -44,7 +43,7 @@ def _session_agg(spark, in_dir, schema):
     )
 
 
-def test_session_state_survives_restart(spark, sf_dir):
+def test_session_state_survives_restart(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
@@ -52,8 +51,9 @@ def test_session_state_survives_restart(spark, sf_dir):
     schema = docs.schema
 
     # two batch files ordered by mtime so the restart resumes mid-corpus
-    work = tempfile.mkdtemp(prefix="nes_sdrec_work_")
-    in_dir = tempfile.mkdtemp(prefix="nes_sdrec_in_")
+    work = str(tmp_path / "work")
+    in_dir = str(tmp_path / "in")
+    os.mkdir(in_dir)
     for i, half in enumerate(
         (docs.where(F.col("doc_id") % 2 == 0), docs.where(F.col("doc_id") % 2 == 1))
     ):
@@ -63,8 +63,8 @@ def test_session_state_survives_restart(spark, sf_dir):
         shutil.copy(part, dst)
         os.utime(dst, (1000 + i, 1000 + i))
 
-    ckpt = tempfile.mkdtemp(prefix="nes_sdrec_ckpt_") + "/cp"
-    out_dir = tempfile.mkdtemp(prefix="nes_sdrec_out_") + "/snap"
+    ckpt = str(tmp_path / "cp")
+    out_dir = str(tmp_path / "snap")
 
     def start():
         # complete-mode foreachBatch overwriting a parquet snapshot: the

@@ -10,25 +10,25 @@ checkpoint must deliver every input row to the file sink exactly once.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 import pyspark.sql.functions as F
 
 
-def test_restart_from_checkpoint_no_loss_no_dup(spark, sf_dir):
+def test_restart_from_checkpoint_no_loss_no_dup(spark, sf_dir, tmp_path):
     events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "user_id", "event_type"
     )
     n_total = events.count()
 
     # two input files so the stream has two discrete units of work
-    src = tempfile.mkdtemp(prefix="nes_rec_src_")
+    src = str(tmp_path / "src")
     half = events.where(F.col("event_id") % 2 == 0)
     other = events.where(F.col("event_id") % 2 == 1)
     half.coalesce(1).write.parquet(os.path.join(src, "a"))
     other.coalesce(1).write.parquet(os.path.join(src, "b"))
-    in_dir = tempfile.mkdtemp(prefix="nes_rec_in_")
+    in_dir = str(tmp_path / "in")
+    os.mkdir(in_dir)
     for sub in ["a", "b"]:
         for f in os.listdir(os.path.join(src, sub)):
             if f.endswith(".parquet"):
@@ -37,8 +37,8 @@ def test_restart_from_checkpoint_no_loss_no_dup(spark, sf_dir):
                     os.path.join(in_dir, f"{sub}_{f}"),
                 )
 
-    out_dir = tempfile.mkdtemp(prefix="nes_rec_out_") + "/out"
-    ckpt = tempfile.mkdtemp(prefix="nes_rec_ckpt_") + "/cp"
+    out_dir = str(tmp_path / "out")
+    ckpt = str(tmp_path / "cp")
 
     def start():
         stream = (

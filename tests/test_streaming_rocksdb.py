@@ -9,7 +9,6 @@ not just cited.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 import pyspark.sql.functions as F
@@ -25,12 +24,13 @@ from nomad_event_streamer_spark.streaming.runner import (
 PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 
-def _run_summary(spark, sf_dir):
+def _run_summary(spark, sf_dir, work):
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    d = tempfile.mkdtemp(prefix="nes_rocks_")
+    d = work / "in"
+    d.mkdir(parents=True)
     os.symlink(f"{sf_dir}/events.parquet", os.path.join(d, "events.parquet"))
     stream = canonicalize_events_ts(
-        spark.readStream.schema(schema).parquet(d)
+        spark.readStream.schema(schema).parquet(str(d))
     ).select("user_id", "event_id", F.expr("ts div 1000").alias("ts_us"))
     updates = summary_stream(stream.groupBy("user_id"))
     name = f"rocks_{uuid.uuid4().hex[:10]}"
@@ -38,10 +38,7 @@ def _run_summary(spark, sf_dir):
         updates.writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.mkdtemp(prefix="nes_rocks_ckpt_"), "cp"),
-        )
+        .option("checkpointLocation", str(work / "cp"))
         .trigger(availableNow=True)
         .start()
     )
@@ -57,13 +54,13 @@ def _run_summary(spark, sf_dir):
     return sorted(map(tuple, final.collect()))
 
 
-def test_rocksdb_state_store_matches_default(spark, sf_dir):
+def test_rocksdb_state_store_matches_default(spark, sf_dir, tmp_path):
     prev = spark.conf.get(PROVIDER_CONF, None)
-    default_result = _run_summary(spark, sf_dir)
+    default_result = _run_summary(spark, sf_dir, tmp_path / "default")
     try:
         use_rocksdb_state(spark)
         assert spark.conf.get(PROVIDER_CONF) == ROCKSDB_PROVIDER
-        rocks_result = _run_summary(spark, sf_dir)
+        rocks_result = _run_summary(spark, sf_dir, tmp_path / "rocksdb")
     finally:
         if prev is None:
             spark.conf.unset(PROVIDER_CONF)
