@@ -23,7 +23,7 @@ import hashlib
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import DoubleType
 
 
@@ -304,6 +304,20 @@ def ann_topk_int(
     return _quantized_score_topk(c.join(F.broadcast(q), "bucket"), k)
 
 
+def centroid_d2(vcol_sql: str, cent: list[int]) -> Column:
+    """Exact integer squared-L2 distance from the BIGINT-array column
+    named ``vcol_sql`` to one literal centroid.  ONE expr string per
+    centroid: per-element F.lit plus the zip_with/aggregate lambda
+    wrappers cost a py4j round-trip each and dominated PLAN BUILD
+    (measured 5.9 s of a 7.3 s query at 16 cells x 64 dims x 2 uses)."""
+    cl = "array(" + ",".join(f"{v}L" for v in cent) + ")"
+    return F.expr(
+        f"aggregate(zip_with({vcol_sql}, {cl},"
+        " (x, y) -> (x - y) * (x - y)),"
+        " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+    )
+
+
 def ivf_topk_int(
     vecs: DataFrame,
     queries: DataFrame,
@@ -357,20 +371,8 @@ def ivf_topk_int(
     )
     cents = [[int(x) for x in r["c_vec"]] for r in seeds]
 
-    def _d2(vcol_sql: str, cent):
-        # ONE expr string per centroid — per-element F.lit plus the
-        # zip_with/aggregate lambda wrappers cost a py4j round-trip
-        # each and dominated PLAN BUILD (measured 5.9 s of a 7.3 s
-        # query at 16 cells x 64 dims x 2 uses before this)
-        cl = "array(" + ",".join(f"{v}L" for v in cent) + ")"
-        return F.expr(
-            f"aggregate(zip_with({vcol_sql}, {cl},"
-            " (x, y) -> (x - y) * (x - y)),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        )
-
     def _dists(vcol_sql: str):
-        return F.array(*[_d2(vcol_sql, cent) for cent in cents])
+        return F.array(*[centroid_d2(vcol_sql, cent) for cent in cents])
 
     # Two-step projection so the 16-distance array is computed ONCE per
     # row (CollapseProject keeps non-cheap aliases used twice; physical
@@ -390,7 +392,7 @@ def ivf_topk_int(
         F.array(
             *[
                 F.struct(
-                    _d2("q_vec", cent).alias("d"),
+                    centroid_d2("q_vec", cent).alias("d"),
                     F.lit(i).cast("long").alias("c"),
                 )
                 for i, cent in enumerate(cents)

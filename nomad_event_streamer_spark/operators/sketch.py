@@ -208,6 +208,33 @@ def hll_registers_oracle_sql(
     """
 
 
+def bloom_positions(keys: DataFrame, hashes: DataFrame, m: int) -> DataFrame:
+    """The bits an ``m``-bit Bloom filter sets for each ``key``: one
+    ``(key, bit)`` row per hash function ``j`` of the broadcast
+    ``hashes`` frame, bit = the first 15 hex digits of md5('b<j>:<key>')
+    mod ``m``.  md5, conv and mod only, so DuckDB derives the same bits."""
+    bit = (
+        F.conv(
+            F.substring(
+                F.md5(
+                    F.concat(
+                        F.lit("b"),
+                        F.col("j").cast("string"),
+                        F.lit(":"),
+                        F.col("key").cast("string"),
+                    )
+                ),
+                1,
+                15,
+            ),
+            16,
+            10,
+        ).cast("long")
+        % m
+    )
+    return keys.crossJoin(F.broadcast(hashes)).select("key", bit.alias("bit"))
+
+
 def hash_bucket_prefilter(
     probe: DataFrame,
     build: DataFrame,

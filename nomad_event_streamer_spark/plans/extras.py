@@ -664,8 +664,13 @@ def q_webhook_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REF's webhook payload shaping as a declared batch query
     (app.rb:183-189,213-265): markdown subject/description build, Discord
     decimal colors, Slack hex colors, and the Slack '**'->'*' bold
-    rewrite — every string op exact, fully oracled."""
+    rewrite — every string op exact, fully oracled.  The colors and the
+    bold rewrite are the webhook sink's own column expressions; the
+    description is built here with ``concat`` because ``k`` can be NULL,
+    and the sink's ``concat_ws`` skips a NULL where DuckDB's ``||``
+    yields NULL."""
     from ..functions import classify_state
+    from ..streaming.sinks import discord_color, slack_bold, slack_color
 
     ev = events(spark, sf_dir)
     classified = ev.select(
@@ -687,13 +692,9 @@ def q_webhook_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "subject",
         description.alias("description"),
-        F.when(F.col("state") == "failure", F.lit(15158332))
-        .when(F.col("state") == "success", F.lit(3066993))
-        .alias("discord_color"),
-        F.when(F.col("state") == "failure", F.lit("#e74c3c"))
-        .when(F.col("state") == "success", F.lit("#2ecc71"))
-        .alias("slack_color"),
-        F.regexp_replace(description, r"\*\*", "*").alias("slack_text"),
+        discord_color().alias("discord_color"),
+        slack_color().alias("slack_color"),
+        slack_bold(description).alias("slack_text"),
     )
 
 

@@ -4567,17 +4567,7 @@ def q_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents = [[int(x) for x in r["qv"]] for r in seeds]
 
-    def _d2(vcol_sql, cent):
-        # one expr string per centroid (the ivf_topk_int plan-build
-        # lesson: per-element F.lit + lambda wrappers are py4j calls)
-        cl = "array(" + ",".join(f"{v}L" for v in cent) + ")"
-        return F.expr(
-            f"aggregate(zip_with({vcol_sql}, {cl},"
-            " (x, y) -> (x - y) * (x - y)),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        )
-
-    dists = F.array(*[_d2("qv", cent) for cent in cents])
+    dists = F.array(*[similarity.centroid_d2("qv", cent) for cent in cents])
     assigned = (
         qz.withColumn("dists", dists)
         .withColumn("d", F.array_min(F.col("dists")))

@@ -20,7 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..operators import dedup, urls
+from ..operators import dedup, sketch, urls
 from ..tables import load, rebalance_for_cpu
 from .curation_queries import URL_EXPR
 from .registry import query
@@ -2981,34 +2981,12 @@ def q_bloom_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hj = spark.range(3).select(F.col("id").alias("j"))
 
-    def positions(df: DataFrame, m: int) -> DataFrame:
-        bit = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("b"),
-                            F.col("j").cast("string"),
-                            F.lit(":"),
-                            F.col("key").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % m
-        )
-        return df.crossJoin(F.broadcast(hj)).select("key", bit.alias("bit"))
-
     n_probes = probe.agg(F.count(F.lit(1)).cast("long").alias("np"))
     parts = []
     for m in _BLOOM_MS:
-        bits = positions(mem, m).select("bit").distinct()
+        bits = sketch.bloom_positions(mem, hj, m).select("bit").distinct()
         hits = (
-            positions(probe, m)
+            sketch.bloom_positions(probe, hj, m)
             .join(bits.withColumn("present", F.lit(1)), "bit", "left")
             .groupBy("key")
             .agg(F.sum(F.coalesce(F.col("present"), F.lit(0))).alias("n_hit"))

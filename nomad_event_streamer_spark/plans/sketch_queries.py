@@ -1008,37 +1008,15 @@ def q_bloom_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hj = spark.range(_BF_K).select(F.col("id").alias("j"))
 
-    def positions(df: DataFrame) -> DataFrame:
-        bit = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("b"),
-                            F.col("j").cast("string"),
-                            F.lit(":"),
-                            F.col("key").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % _BF_M
-        )
-        return df.crossJoin(F.broadcast(hj)).select("key", bit.alias("bit"))
-
-    bits = positions(mem).select("bit").distinct()
+    bits = sketch.bloom_positions(mem, hj, _BF_M).select("bit").distinct()
     probe_hits = (
-        positions(probe)
+        sketch.bloom_positions(probe, hj, _BF_M)
         .join(bits.withColumn("present", F.lit(1)), "bit", "left")
         .groupBy("key")
         .agg(F.sum(F.coalesce(F.col("present"), F.lit(0))).alias("n_hit"))
     )
     member_hits = (
-        positions(mem)
+        sketch.bloom_positions(mem, hj, _BF_M)
         .join(bits.withColumn("present", F.lit(1)), "bit", "left")
         .groupBy("key")
         .agg(F.sum(F.coalesce(F.col("present"), F.lit(0))).alias("n_hit"))

@@ -12,8 +12,9 @@ with a checkpointed Structured Streaming query:
   upgrading at-most-once to effectively-once per batch id: a ledger
   inside the checkpoint skips the delivery of a replayed batch, and the
   skip still runs the batch so its state commits.  Each micro-batch is
-  computed and cached once (one dedup and state commit per batch), and
-  ``sinks.http_transport`` POSTs it from the driver.
+  one frame with a payload column per destination, read by one
+  transport call (one dedup and state commit per batch), and
+  ``sinks.http_transport`` collects it once and POSTs it from the driver.
 """
 
 from __future__ import annotations
@@ -88,12 +89,15 @@ def start_webhook_query(
     deduped: DataFrame,
     checkpoint_dir: str,
     output_dir: str,
-    transport: Callable[[DataFrame, str], None] | None = None,
+    transport: Callable[[DataFrame, int], None] | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
     """Effectively-once delivery of ``deduped`` through ``transport``
-    (``batch_overwrite_transport`` under ``output_dir`` by default).  The
-    delivery ledger is ``<checkpoint_dir>/delivered``, so deleting the
+    (``batch_overwrite_transport`` under ``output_dir`` by default),
+    called once per micro-batch as ``(frame, batch_id)``.  The frame has
+    a ``discord`` and a ``slack`` payload column; which of them reach a
+    webhook is the transport's own choice (``http_transport``'s
+    ``urls``).  The delivery ledger is ``<checkpoint_dir>/delivered``, so deleting the
     checkpoint clears it too.  A new checkpoint gets one dedup state
     partition per core, not one per shuffle partition: each state
     partition writes delta and checksum files every batch, a fixed cost

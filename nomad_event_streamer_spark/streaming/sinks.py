@@ -2,18 +2,19 @@
 
 The reference POSTs one webhook per event, sequentially, no retry
 (at-most-once; app.rb:229-234,258-262).  Here payload shaping is a pure
-projection (so it runs distributed) and delivery is a ``foreachBatch``
-that fans out each micro-batch to every destination.  There is one
-delivery guarantee, effectively-once per batch id: the checkpointed
-offsets replay a failed batch, and ``effectively_once``'s ledger, kept
-inside the checkpoint, skips a replayed batch that was already
-delivered while still running it so its state commits.
+column expression (so it runs distributed) and delivery is a
+``foreachBatch`` that hands each micro-batch to the transport as one
+frame with one payload column per destination.  There is one delivery
+guarantee, effectively-once per batch id: the checkpointed offsets
+replay a failed batch, and ``effectively_once``'s ledger, kept inside
+the checkpoint, skips a replayed batch that was already delivered while
+still running it so its state commits.
 
 Delivery is injectable, and every transport is called as
-``(payloads, destination)``: ``batch_overwrite_transport`` writes one
-parquet partition per batch (the test/dev stand-in); ``http_transport``
-POSTs each event from the driver, in order, over one keep-alive
-connection per destination and batch (stdlib ``http.client``).
+``(frame, batch_id)``: ``batch_overwrite_transport`` writes one parquet
+directory per batch (the test/dev stand-in); ``http_transport`` collects
+the frame once and POSTs each event from the driver, in order, over one
+keep-alive connection per destination and batch (stdlib ``http.client``).
 """
 
 from __future__ import annotations
@@ -34,7 +35,8 @@ SLACK_COLOR_FAILURE = "#e74c3c"
 SLACK_COLOR_SUCCESS = "#2ecc71"
 
 
-def _discord_color() -> Column:
+def discord_color() -> Column:
+    """Embed color of the ``state`` column (app.rb:215-221)."""
     return (
         F.when(F.col("state") == "failure", F.lit(DISCORD_COLOR_FAILURE))
         .when(F.col("state") == "success", F.lit(DISCORD_COLOR_SUCCESS))
@@ -42,12 +44,18 @@ def _discord_color() -> Column:
     )
 
 
-def _slack_color() -> Column:
+def slack_color() -> Column:
+    """Attachment color of the ``state`` column (app.rb:243-249)."""
     return (
         F.when(F.col("state") == "failure", F.lit(SLACK_COLOR_FAILURE))
         .when(F.col("state") == "success", F.lit(SLACK_COLOR_SUCCESS))
         .otherwise(F.lit(None).cast("string"))
     )
+
+
+def slack_bold(markdown: Column) -> Column:
+    """Slack's bold rewrite of a markdown body: '**' -> '*' (app.rb:245)."""
+    return F.regexp_replace(markdown, r"\*\*", "*")
 
 
 def _description() -> Column:
@@ -61,83 +69,67 @@ def _description() -> Column:
     )
 
 
-def discord_payload(classified: DataFrame) -> DataFrame:
+def discord_payload() -> Column:
     """POST body per event: {content, embeds: [{description, color}]}
     (app.rb:213-237)."""
-    return classified.select(
-        "raft_index",
-        "task_identifier",
-        "event_type",
-        "event_time_ns",
-        F.to_json(
-            F.struct(
-                F.col("subject").alias("content"),
-                F.array(
-                    F.struct(
-                        _description().alias("description"),
-                        _discord_color().alias("color"),
-                    )
-                ).alias("embeds"),
-            )
-        ).alias("payload"),
+    return F.to_json(
+        F.struct(
+            F.col("subject").alias("content"),
+            F.array(
+                F.struct(
+                    _description().alias("description"),
+                    discord_color().alias("color"),
+                )
+            ).alias("embeds"),
+        )
     )
 
 
-def slack_payload(classified: DataFrame) -> DataFrame:
+def slack_payload() -> Column:
     """POST body per event: {attachments: [{mrkdwn_in, text, pretext,
     color}]} with the '**' -> '*' bold rewrite (app.rb:239-265)."""
-    slack_text = F.regexp_replace(_description(), r"\*\*", "*")
-    return classified.select(
-        "raft_index",
-        "task_identifier",
-        "event_type",
-        "event_time_ns",
-        F.to_json(
-            F.struct(
-                F.array(
-                    F.struct(
-                        F.array(F.lit("text"), F.lit("pretext")).alias("mrkdwn_in"),
-                        slack_text.alias("text"),
-                        F.col("subject").alias("pretext"),
-                        _slack_color().alias("color"),
-                    )
-                ).alias("attachments"),
-            )
-        ).alias("payload"),
+    return F.to_json(
+        F.struct(
+            F.array(
+                F.struct(
+                    F.array(F.lit("text"), F.lit("pretext")).alias("mrkdwn_in"),
+                    slack_bold(_description()).alias("text"),
+                    F.col("subject").alias("pretext"),
+                    slack_color().alias("color"),
+                )
+            ).alias("attachments"),
+        )
     )
 
 
-def batch_overwrite_transport(dest_dir: str) -> Callable[[DataFrame, str], None]:
+def batch_overwrite_transport(dest_dir: str) -> Callable[[DataFrame, int], None]:
     """File delivery (the test/dev stand-in for the HTTP POST): each
-    micro-batch lands in ``<dest_dir>/<destination>/batch_id=<n>/``.
-    The partition is overwritten, not appended to, so a replayed batch
-    rewrites its own files instead of adding duplicates."""
+    micro-batch's frame lands in ``<dest_dir>/batch_id=<n>/``, one column
+    per destination.  The directory is overwritten, not appended to, so a
+    replayed batch rewrites its own files instead of adding duplicates."""
 
-    def send(payloads: DataFrame, destination: str) -> None:
-        (
-            payloads.withColumn("destination", F.lit(destination))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{dest_dir}/{destination}")
-        )
+    def send(frame: DataFrame, batch_id: int) -> None:
+        frame.write.mode("overwrite").parquet(f"{dest_dir}/batch_id={batch_id}")
 
     return send
 
 
 def http_transport(
     urls: dict[str, str], timeout: float = 10.0
-) -> Callable[[DataFrame, str], None]:
+) -> Callable[[DataFrame, int], None]:
     """Real HTTP delivery matching the reference's webhook semantics
     (app.rb:229-234,258-262): one POST per event, JSON body, no
     application-level retry — a failed POST raises and fails the batch.
 
-    Delivery runs on the driver, sequentially per destination: ``send``
-    collects the payload column and POSTs the rows in order over one
-    ``http.client`` connection (keep-alive reuse on HTTP/1.1 servers,
-    transparent reopen on HTTP/1.0), so no Python worker task starts.
-    The caller (``_deliver_once``) has hash-partitioned the batch by
-    ``task_identifier`` and sorted each partition by (raft_index,
+    ``urls`` maps a destination (a payload column of the frame) to its
+    webhook URL, and only those destinations are POSTed.  Delivery runs
+    on the driver: ``send`` collects the destinations' columns in one
+    job, then POSTs each destination's rows in order, destination after
+    destination in ``urls`` order, over one ``http.client`` connection
+    per destination (keep-alive reuse on HTTP/1.1 servers, transparent
+    reopen on HTTP/1.0), so no Python worker task starts.  The frame
+    ``webhook_foreach_batch`` builds is hash-partitioned by
+    ``task_identifier`` and sorted within each partition by (raft_index,
     event_time_ns); ``collect()`` returns the partitions in order, so
     per-task event order matches the reference's sequential loop.
 
@@ -155,9 +147,7 @@ def http_transport(
     Receivers that must never see a duplicate dedupe on the event key.
     (The reference itself is fire-and-forget.)"""
 
-    def send(payloads: DataFrame, destination: str) -> None:
-        url = urls[destination]
-        rows = payloads.select("payload").collect()
+    def post(url: str, bodies: list[str]) -> None:
         parts = urlsplit(url)
         conn_cls = (
             http.client.HTTPSConnection
@@ -174,8 +164,8 @@ def http_transport(
         conn = connect()
         reused = False  # has this connection already served a request?
         try:
-            for row in rows:
-                body = row["payload"].encode("utf-8")
+            for payload in bodies:
+                body = payload.encode("utf-8")
                 headers = {"Content-Type": "application/json"}
                 # Narrowed retry.  Two retryable cases only:
                 #   (a) the SEND itself failed — the server cannot have
@@ -222,59 +212,46 @@ def http_transport(
         finally:
             conn.close()
 
+    def send(frame: DataFrame, batch_id: int) -> None:
+        rows = frame.select(*urls).collect()
+        for destination, url in urls.items():
+            post(url, [row[destination] for row in rows])
+
     return send
 
 
-_SHAPERS: dict[str, Callable[[DataFrame], DataFrame]] = {
-    "discord": discord_payload,
-    "slack": slack_payload,
-}
-
-
-def _deliver_once(
-    batch: DataFrame,
-    batch_id: int,
-    destinations: tuple[str, ...],
-    deliver: Callable[[DataFrame, str], None],
-) -> None:
-    """Compute the micro-batch once and hand each destination its payload.
-
-    The batch is hash-partitioned by ``task_identifier`` into one
-    partition per core, sorted by (raft_index, event_time_ns) within each
-    partition, and cached.  Every destination's payload is a projection
-    of that cached frame plus a literal ``batch_id`` column, so the
-    stateful plan behind ``batch`` (scan, dedup, state-store commits)
-    runs once per micro-batch instead of once per destination, and
-    per-task order survives the projection."""
-    frame = (
-        batch.repartition(
-            batch.sparkSession.sparkContext.defaultParallelism, "task_identifier"
-        )
-        .sortWithinPartitions("raft_index", "event_time_ns")
-        .persist()
-    )
-    try:
-        for dest in destinations:
-            deliver(_SHAPERS[dest](frame).withColumn("batch_id", F.lit(batch_id)), dest)
-    finally:
-        frame.unpersist()
-
-
 def webhook_foreach_batch(
-    transport: Callable[[DataFrame, str], None],
-    destinations: tuple[str, ...] = ("discord", "slack"),
+    transport: Callable[[DataFrame, int], None],
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch body: shape + deliver each micro-batch to every
-    destination (app.rb:211,236,264 fan-out), preserving per-key order
-    within a batch.
+    """foreachBatch body: shape each micro-batch for every destination
+    (app.rb:211,236,264 fan-out) and hand it to ``transport`` as one
+    frame, preserving per-key order within a batch.
 
-    The batch is computed and cached once (``_deliver_once``), then each
-    destination's payload projection goes to ``transport``; with
-    ``http_transport`` that is a driver-side collect and sequential
-    POSTs, so a micro-batch starts no Python worker task."""
+    The frame is hash-partitioned by ``task_identifier`` into one
+    partition per core and sorted by (raft_index, event_time_ns) within
+    each partition; it holds the event key columns plus one payload
+    column per destination (``discord``, ``slack``).  One transport call
+    reads it, so the stateful plan behind ``batch`` (scan, dedup,
+    state-store commits) runs once per micro-batch; with
+    ``http_transport`` that is one Spark job and a driver-side collect,
+    so a micro-batch starts no Python worker task."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        _deliver_once(batch, batch_id, destinations, transport)
+        frame = (
+            batch.repartition(
+                batch.sparkSession.sparkContext.defaultParallelism, "task_identifier"
+            )
+            .sortWithinPartitions("raft_index", "event_time_ns")
+            .select(
+                "raft_index",
+                "task_identifier",
+                "event_type",
+                "event_time_ns",
+                discord_payload().alias("discord"),
+                slack_payload().alias("slack"),
+            )
+        )
+        transport(frame, batch_id)
 
     return process
 

@@ -68,9 +68,9 @@ def _files_and_posts(tmp_path, urls):
     files = batch_overwrite_transport(str(tmp_path / "out"))
     post = http_transport(urls)
 
-    def send(payloads, destination):
-        files(payloads, destination)
-        post(payloads, destination)
+    def send(frame, batch_id):
+        files(frame, batch_id)
+        post(frame, batch_id)
 
     return send
 
@@ -88,7 +88,7 @@ def _run(spark, input_dir, tmp_path, transport=None):
 
 
 def _rows(spark, tmp_path):
-    out = spark.read.parquet(str(tmp_path / "out" / "discord"))
+    out = spark.read.parquet(str(tmp_path / "out"))
     return sorted(out.collect()), _dupes(out)
 
 
@@ -128,10 +128,7 @@ def test_overwrite_transport_replay_no_duplicates(tmp_path, spark):
     """Delivering the same batch twice (crash between delivery and
     ledger write) rewrites the same files instead of appending."""
     classified = build_stream(read_ndjson_stream(spark, _input(tmp_path, 4)))
-    process = webhook_foreach_batch(
-        batch_overwrite_transport(str(tmp_path / "out")),
-        destinations=("discord",),
-    )
+    process = webhook_foreach_batch(batch_overwrite_transport(str(tmp_path / "out")))
     q = (
         classified.writeStream.foreachBatch(
             lambda b, bid: (process(b, bid), process(b, bid))  # deliver twice
@@ -143,7 +140,7 @@ def test_overwrite_transport_replay_no_duplicates(tmp_path, spark):
     )
     q.awaitTermination(120)
 
-    out = spark.read.parquet(str(tmp_path / "out" / "discord"))
+    out = spark.read.parquet(str(tmp_path / "out"))
     assert out.count() > 0 and _dupes(out) == 0
 
 
@@ -154,7 +151,7 @@ def test_end_to_end_restart_no_duplicates(tmp_path, spark):
     for _ in range(2):
         _run(spark, input_dir, tmp_path)
 
-    out = spark.read.parquet(str(tmp_path / "out" / "discord"))
+    out = spark.read.parquet(str(tmp_path / "out"))
     assert out.count() > 0 and _dupes(out) == 0
 
 

@@ -29,8 +29,9 @@ from nomad_event_streamer_spark.streaming.watchdog import HeartbeatWatchdog, sup
 
 def test_webhook_pipeline_end_to_end(tmp_path, spark):
     """File stream -> pipeline -> watermark dedup -> foreachBatch fan-out
-    to discord+slack parquet transports; duplicate envelopes delivered
-    once (app.rb:162-167 staleness semantics, relaxed form)."""
+    to the parquet transport, one discord and one slack payload column;
+    duplicate envelopes delivered once (app.rb:162-167 staleness
+    semantics, relaxed form)."""
     input_dir = tmp_path / "in"
     input_dir.mkdir()
     lines = sample_stream(6)
@@ -48,13 +49,14 @@ def test_webhook_pipeline_end_to_end(tmp_path, spark):
     )
     q.awaitTermination(120)
 
-    discord = spark.read.parquet(str(tmp_path / "out" / "discord"))
-    slack = spark.read.parquet(str(tmp_path / "out" / "slack"))
-    assert discord.count() == slack.count() > 0
+    out = spark.read.parquet(str(tmp_path / "out"))
+    # every delivered event carries both destinations' payloads
+    both = F.col("discord").isNotNull() & F.col("slack").isNotNull()
+    assert out.where(both).count() == out.count() > 0
 
     # exactly-once per (task_identifier, event_time_ns) despite the replayed file
     dupes = (
-        discord.groupBy("task_identifier", "event_time_ns")
+        out.groupBy("task_identifier", "event_time_ns")
         .count()
         .where(F.col("count") > 1)
         .count()
@@ -62,12 +64,12 @@ def test_webhook_pipeline_end_to_end(tmp_path, spark):
     assert dupes == 0
 
     # payload shape: discord embeds with color, slack attachments with hex color
-    d_payload = json.loads(discord.limit(1).collect()[0]["payload"])
+    d_payload = json.loads(out.limit(1).collect()[0]["discord"])
     assert "content" in d_payload and "embeds" in d_payload
-    s_rows = slack.where(F.col("payload").contains("#e74c3c")).count()
+    s_rows = out.where(F.col("slack").contains("#e74c3c")).count()
     assert s_rows > 0, "slack failure color must appear"
     # slack bold rewrite: no '**' remains (app.rb:245)
-    assert slack.where(F.col("payload").contains("**")).count() == 0
+    assert out.where(F.col("slack").contains("**")).count() == 0
 
 
 def test_file_batch_lists_its_files_on_the_driver(tmp_path, spark):
@@ -87,9 +89,10 @@ def test_file_batch_lists_its_files_on_the_driver(tmp_path, spark):
 
     delivered: dict[str, list[int]] = {}
 
-    def record(payloads, destination):
-        rows = payloads.select("event_time_ns").collect()
-        delivered.setdefault(destination, []).extend(r.event_time_ns for r in rows)
+    def record(frame, batch_id):
+        rows = frame.select("event_time_ns", "discord", "slack").collect()
+        for dest in ("discord", "slack"):
+            delivered.setdefault(dest, []).extend(r.event_time_ns for r in rows if r[dest])
 
     q = start_webhook_query(
         build_stream(read_ndjson_stream(spark, str(input_dir))),

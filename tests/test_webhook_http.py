@@ -1,6 +1,7 @@
 """Real HTTP webhook delivery (app.rb:229-234,258-262): POST bodies that
 arrive at a live local server must be byte-identical to the oracled
-payload projections, for both Discord and Slack shapes."""
+payload columns, for both Discord and Slack shapes, and each
+micro-batch reaches the transport as one frame in one call."""
 
 import http.client
 import json
@@ -80,10 +81,10 @@ def test_http_post_bodies_match_payload_projection(tmp_path, spark):
         # streaming dedup is value-neutral)
         batch = task_event_pipeline(spark.read.text(str(input_dir)))
         want_discord = {
-            r["payload"].encode() for r in discord_payload(batch).collect()
+            r[0].encode() for r in batch.select(discord_payload()).collect()
         }
         want_slack = {
-            r["payload"].encode() for r in slack_payload(batch).collect()
+            r[0].encode() for r in batch.select(slack_payload()).collect()
         }
         got_discord = {b for p, b in _Recorder.received if p == "/discord"}
         got_slack = {b for p, b in _Recorder.received if p == "/slack"}
@@ -117,13 +118,13 @@ def test_http_failure_raises_and_fails_batch(tmp_path, spark):
     try:
         url = f"http://127.0.0.1:{srv.server_port}/hook"
         df = spark.createDataFrame(
-            [("a", '{"k": 1}')], "task_identifier string, payload string"
+            [("a", '{"k": 1}')], "task_identifier string, discord string"
         )
         transport = http_transport({"discord": url})
         import pytest as _pytest
 
         with _pytest.raises(Exception):
-            transport(df, "discord")
+            transport(df, 0)
     finally:
         srv.shutdown()
 
@@ -150,13 +151,13 @@ def test_http_fresh_connection_close_raises_not_retries(tmp_path, spark):
     try:
         url = f"http://127.0.0.1:{srv.server_address[1]}/hook"
         df = spark.createDataFrame(
-            [("a", '{"k": 1}')], "task_identifier string, payload string"
+            [("a", '{"k": 1}')], "task_identifier string, discord string"
         ).coalesce(1)
         transport = http_transport({"discord": url})
         import pytest as _pytest
 
         with _pytest.raises(Exception):
-            transport(df, "discord")
+            transport(df, 0)
         # exactly one request hit the wire: no hidden duplicate resend
         assert len(hits) == 1
     finally:
@@ -167,7 +168,8 @@ def test_http_delivery_on_driver_in_order_over_one_connection(
     tmp_path, spark, monkeypatch
 ):
     """``http_transport`` POSTs from the driver: each destination's share
-    of a micro-batch travels over one keep-alive connection, every task's
+    of a micro-batch travels over one keep-alive connection, the
+    destinations follow each other in ``urls`` order, every task's
     bodies arrive in (raft_index, event_time_ns) order, and every request
     is made in this process (a POST from a Python worker process would
     not pass through the wrapped ``request``)."""
@@ -208,17 +210,18 @@ def test_http_delivery_on_driver_in_order_over_one_connection(
     srv = ThreadingHTTPServer(("127.0.0.1", 0), _KeepAlive)
     srv.daemon_threads = True
     threading.Thread(target=srv.serve_forever, daemon=True).start()
+    order = ["/slack", "/discord"]  # not the frame's column order
     base = http_transport(
-        {d: f"http://127.0.0.1:{srv.server_port}/{d}" for d in ("discord", "slack")}
+        {p[1:]: f"http://127.0.0.1:{srv.server_port}{p}" for p in order}
     )
-    calls: list[tuple[str, list]] = []  # (destination, requests it made)
+    calls: list[tuple[int, list]] = []  # (batch id, requests it made)
 
-    def transport(payloads, destination):
+    def transport(frame, batch_id):
         with lock:
             start = len(received)
-        base(payloads, destination)
+        base(frame, batch_id)
         with lock:
-            calls.append((destination, received[start:]))
+            calls.append((batch_id, received[start:]))
 
     input_dir = tmp_path / "in"
     input_dir.mkdir()
@@ -237,43 +240,127 @@ def test_http_delivery_on_driver_in_order_over_one_connection(
         srv.server_close()
 
     batch = task_event_pipeline(spark.read.text(str(input_dir)))
+    rows = batch.select(
+        "task_identifier",
+        "raft_index",
+        "event_time_ns",
+        discord_payload().alias("discord"),
+        slack_payload().alias("slack"),
+    ).collect()
     key_of: dict[str, dict[bytes, tuple]] = {}
-    for dest, shape in (("discord", discord_payload), ("slack", slack_payload)):
-        rows = shape(batch).collect()
-        key_of[dest] = {
-            r["payload"].encode(): (r["task_identifier"], r["raft_index"], r["event_time_ns"])
+    for dest in ("discord", "slack"):
+        key_of[f"/{dest}"] = {
+            r[dest].encode(): (r["task_identifier"], r["raft_index"], r["event_time_ns"])
             for r in rows
         }
-        assert len(key_of[dest]) == len(rows) > 0  # a body names its event
+        assert len(key_of[f"/{dest}"]) == len(rows) > 0  # a body names its event
 
-    delivering = [(dest, served) for dest, served in calls if served]
-    assert {dest for dest, _ in delivering} == {"discord", "slack"}
+    delivering = [served for _, served in calls if served]
+    assert {path for served in delivering for _, path, _ in served} == set(order)
+    assert len({batch_id for batch_id, _ in calls}) == len(calls)  # one call a batch
     # one connection per destination and batch, reused for every POST
-    assert len(connections) == len(delivering)
+    assert len(connections) == sum(
+        len({path for _, path, _ in served}) for served in delivering
+    )
     assert driver_requests == len(received)
     ordered_runs = 0
-    for dest, served in delivering:
-        assert len({conn for conn, _, _ in served}) == 1
-        assert {path for _, path, _ in served} == {f"/{dest}"}
-        per_task: dict[str, list] = {}
-        for _, _, body in served:
-            task, raft, ns = key_of[dest][body]
-            per_task.setdefault(task, []).append((raft, ns))
-        for seq in per_task.values():
-            assert seq == sorted(seq)
-            ordered_runs += len(seq) > 1
+    for served in delivering:
+        paths = [path for _, path, _ in served]
+        assert paths == sorted(paths, key=order.index)  # destination by destination
+        for dest in set(paths):
+            mine = [(conn, body) for conn, path, body in served if path == dest]
+            assert len({conn for conn, _ in mine}) == 1
+            per_task: dict[str, list] = {}
+            for _, body in mine:
+                task, raft, ns = key_of[dest][body]
+                per_task.setdefault(task, []).append((raft, ns))
+            for seq in per_task.values():
+                assert seq == sorted(seq)
+                ordered_runs += len(seq) > 1
     assert ordered_runs > 0
     for dest, keys in key_of.items():
-        assert sorted(b for _, p, b in received if p == f"/{dest}") == sorted(keys)
+        assert sorted(b for _, p, b in received if p == dest) == sorted(keys)
+
+
+def test_discord_only_transport_delivers_each_event_once(tmp_path, spark):
+    """A deployment with a Discord webhook only: the transport POSTs the
+    destinations it has URLs for, so every batch succeeds, every POST
+    goes to Discord and each event arrives once (a batch that failed
+    after its POSTs would re-POST them on each checkpoint replay)."""
+    received: list[tuple[str, bytes]] = []
+
+    class _Record(BaseHTTPRequestHandler):
+        def do_POST(self):  # noqa: N802
+            received.append((self.path, self.rfile.read(int(self.headers["Content-Length"]))))
+            self.send_response(204)
+            self.end_headers()
+
+        def log_message(self, *args):
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), _Record)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    (input_dir / "a.ndjson").write_text("\n".join(sample_stream(6)) + "\n")
+    try:
+        q = start_webhook_query(
+            build_stream(read_ndjson_stream(spark, str(input_dir))),
+            str(tmp_path / "ckpt"),
+            str(tmp_path / "out"),
+            transport=http_transport({"discord": f"http://127.0.0.1:{srv.server_port}/discord"}),
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+    batch = task_event_pipeline(spark.read.text(str(input_dir)))
+    want = sorted(r[0].encode() for r in batch.select(discord_payload()).collect())
+    assert want
+    assert {path for path, _ in received} == {"/discord"}
+    assert sorted(body for _, body in received) == want
+
+
+def test_one_spark_job_per_delivered_batch(tmp_path, spark):
+    """Each micro-batch reaches ``http_transport`` as one frame, so the
+    query's run-id job group holds one Spark job per batch: the
+    collect that computes the batch (scan, dedup, state commit) and
+    yields every destination's payloads.  A cached batch read once per
+    destination shows two."""
+    srv, base = _serve()
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    (input_dir / "a.ndjson").write_text("\n".join(sample_stream(6)) + "\n")
+    _Recorder.received = []
+    try:
+        q = start_webhook_query(
+            build_stream(read_ndjson_stream(spark, str(input_dir))),
+            str(tmp_path / "ckpt"),
+            str(tmp_path / "out"),
+            transport=http_transport({d: f"{base}/{d}" for d in ("discord", "slack")}),
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+    batches = {p["batchId"] for p in q.recentProgress}
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert _Recorder.received and batches
+    assert len(jobs) == len(batches), (len(jobs), sorted(batches))
 
 
 def test_batch_computed_once_and_delivered_per_core(tmp_path, spark):
-    """Each micro-batch runs its stateful plan once, however many
-    destinations it feeds, and each destination gets the batch in one
-    partition per core with every task's events in (raft_index,
-    event_time_ns) order.  Shuffle partitions are set apart from the
-    core count: the state is one partition per core too, so a second
-    computation of the batch would read twice the core count."""
+    """Each micro-batch runs its stateful plan once and reaches the
+    transport as one frame, in one call, with a payload column per
+    destination, in one partition per core and with every task's events
+    in (raft_index, event_time_ns) order.  Shuffle partitions are set
+    apart from the core count: the state is one partition per core too,
+    so a second computation of the batch would read twice the core
+    count."""
     input_dir = tmp_path / "in"
     input_dir.mkdir()
     (input_dir / "a.ndjson").write_text("\n".join(sample_stream(6)) + "\n")
@@ -281,23 +368,22 @@ def test_batch_computed_once_and_delivered_per_core(tmp_path, spark):
     shuffle = 3
     assert cores != shuffle
 
-    recorded: dict[str, list] = {}
+    recorded: list[tuple[int, list, list]] = []  # (batch id, columns, parts)
 
-    def record(payloads, destination):
+    def record(frame, batch_id):
         # one (partition index, keys in delivery order) item per partition
-        recorded.setdefault(destination, []).append(
-            payloads.rdd.mapPartitionsWithIndex(
-                lambda i, rows: [
-                    (
-                        i,
-                        [
-                            (r["task_identifier"], r["raft_index"], r["event_time_ns"])
-                            for r in rows
-                        ],
-                    )
-                ]
-            ).collect()
-        )
+        parts = frame.rdd.mapPartitionsWithIndex(
+            lambda i, rows: [
+                (
+                    i,
+                    [
+                        (r["task_identifier"], r["raft_index"], r["event_time_ns"])
+                        for r in rows
+                    ],
+                )
+            ]
+        ).collect()
+        recorded.append((batch_id, frame.columns, parts))
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
@@ -312,24 +398,31 @@ def test_batch_computed_once_and_delivered_per_core(tmp_path, spark):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
-    assert set(recorded) == {"discord", "slack"}
+    assert len({batch_id for batch_id, _, _ in recorded}) == len(recorded) > 0
     assert _state_widths(q) == {cores}
 
     delivered = 0
     ordered_runs = 0
-    for calls in recorded.values():
-        for parts in calls:
-            assert len(parts) == cores
-            home: dict[str, int] = {}
-            for i, keys in parts:
-                per_task: dict[str, list] = {}
-                for task, raft, ns in keys:
-                    assert home.setdefault(task, i) == i  # one partition per task
-                    per_task.setdefault(task, []).append((raft, ns))
-                for seq in per_task.values():
-                    assert seq == sorted(seq)
-                    ordered_runs += len(seq) > 1
-                delivered += len(keys)
+    for _, columns, parts in recorded:
+        assert columns == [
+            "raft_index",
+            "task_identifier",
+            "event_type",
+            "event_time_ns",
+            "discord",
+            "slack",
+        ]
+        assert len(parts) == cores
+        home: dict[str, int] = {}
+        for i, keys in parts:
+            per_task: dict[str, list] = {}
+            for task, raft, ns in keys:
+                assert home.setdefault(task, i) == i  # one partition per task
+                per_task.setdefault(task, []).append((raft, ns))
+            for seq in per_task.values():
+                assert seq == sorted(seq)
+                ordered_runs += len(seq) > 1
+            delivered += len(keys)
     assert delivered > 0 and ordered_runs > 0
 
 
@@ -349,8 +442,8 @@ def test_state_width_per_core_on_new_checkpoints_only(tmp_path, spark):
     (input_dir / "a.ndjson").write_text("\n".join(lines) + "\n")
     delivered: list[int] = []
 
-    def record(payloads, destination):
-        delivered.append(payloads.count())
+    def record(frame, batch_id):
+        delivered.append(frame.count())
 
     def stream():
         return build_stream(read_ndjson_stream(spark, str(input_dir)))
