@@ -249,8 +249,8 @@ HEADLINE = [
     "q_perceptron_rounds",
     # round-12 additions: the second capped wedge consumer (replaces the
     # uncapped q_link_predict as the wedge family's tracked plan); the
-    # suffix-array family (one suffix-array pass, one bucketed global
-    # row number and the adjacent-pair LCPs — the corpus-scale member);
+    # suffix-array family (one suffix-array pass, one bucketed neighbour
+    # window and the adjacent-pair LCPs — the corpus-scale member);
     # and the unigram-LM EM round (the SentencePiece counterpart to
     # q_bpe_train: one corpus pass + 24 unrolled vocab-scale DP rounds —
     # tracked for the same round-count-bound reason as the BPE trainer)

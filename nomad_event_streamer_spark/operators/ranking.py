@@ -18,6 +18,12 @@ Cross-bucket coupling is ``num_buckets`` numbers; every heavy stage is
 partition-parallel.  This is the same trick ``q_pack_sequences`` uses
 for its token prefix sum (plans/llm_ops.py), generalized.
 
+"The row before / after me in the total order" needs no rank at all:
+``global_neighbors`` takes ``lag``/``lead`` over the same bucket window
+and patches each bucket's two ends from a table of the buckets' first
+and last rows (again at most ``num_buckets`` rows, broadcast back) —
+one window pass, no row number and no ``rn ± 1`` self-join.
+
 Reference parity: the reference pipeline (app.rb) has no global-order
 operator at all; this exists for the EXT LLM-pipeline surface
 (deterministic dataset shuffling, global sequence numbers).
@@ -35,6 +41,7 @@ __all__ = [
     "bitlen_subbucket",
     "global_row_number",
     "global_dense_rank",
+    "global_neighbors",
     "quantile_boundaries",
 ]
 
@@ -195,6 +202,63 @@ def global_dense_rank(
         ranked.join(F.broadcast(offsets), "__grp")
         .withColumn(out_col, (F.col("__off") + F.col("__dr")).cast("long"))
         .drop("__grp", "__dr", "__off")
+    )
+
+
+def global_neighbors(
+    df: DataFrame,
+    order_exprs: list[Column],
+    bucket: Column,
+    cols: list[str],
+) -> DataFrame:
+    """Append ``prev`` and ``next``: ``struct(cols)`` of the row just
+    before / just after each row of ``df`` in the ASCENDING total order
+    ``order_exprs``, NULL at the two ends of the order.  The struct
+    itself is never NULL for a real neighbour, so a NULL ``prev``/``next``
+    means "no neighbour" even when the carried values are NULL.
+
+    Same contract as ``global_row_number``: ``bucket`` is non-decreasing
+    in the leading sort key and ``order_exprs`` is a total order.
+    Inside a bucket the neighbours are ``lag``/``lead`` over the
+    bucket-partitioned window.  A bucket's first row takes the previous
+    non-empty bucket's last row, and its last row the next non-empty
+    bucket's first row; both come from a one-row-per-bucket table of
+    the windowed output's ends, linked by a window over the bucket
+    ids (driver-scale, like ``global_row_number``'s offsets) and
+    broadcast back.  ``df`` must not already have ``prev``/``next``
+    columns."""
+    tagged = df.withColumn("__grp", bucket)
+    w_in = Window.partitionBy("__grp").orderBy(*order_exprs)
+    row = F.struct(*cols)
+    nb = tagged.select(
+        "*",
+        F.lag(row).over(w_in).alias("__prev"),
+        F.lead(row).over(w_in).alias("__next"),
+    )
+    # exactly one first row and one last row per non-empty bucket
+    first = F.when(F.col("__prev").isNull(), row)
+    last = F.when(F.col("__next").isNull(), row)
+    ends = (
+        nb.where(first.isNotNull() | last.isNotNull())
+        .groupBy("__grp")
+        .agg(
+            F.first(first, ignorenulls=True).alias("__f"),
+            F.first(last, ignorenulls=True).alias("__l"),
+        )
+    )
+    # The link window runs over <= num_buckets rows — driver-scale.
+    w_b = Window.orderBy(F.col("__grp").asc())
+    links = ends.select(
+        F.col("__grp").alias("__g"),
+        F.lag("__l").over(w_b).alias("__pl"),
+        F.lead("__f").over(w_b).alias("__nf"),
+    )
+    return nb.join(
+        F.broadcast(links), F.col("__grp").eqNullSafe(F.col("__g"))
+    ).select(
+        *df.columns,
+        F.coalesce("__prev", "__pl").alias("prev"),
+        F.coalesce("__next", "__nf").alias("next"),
     )
 
 

@@ -68,7 +68,7 @@ def suffix_arrays(docs: DataFrame, rounds: int) -> DataFrame:
 
 
 def suffix_array_bucket(col) -> "F.Column":
-    """Monotone, pure bucket for ``global_dense_rank``/``global_row_number``
+    """Monotone, pure bucket for the ``operators/ranking.py`` devices
     over a suffix-array key: (first token, second token or "").  A
     prefix of the leading sort key, so ordering is preserved; equal
     arrays always share a bucket; <= vocab^2 classes (the offsets table

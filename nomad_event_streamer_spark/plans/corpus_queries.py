@@ -4965,17 +4965,20 @@ def _maximal_repeat_oracle() -> str:
     return ",\n    ".join(parts[:-1]) + "\n    " + parts[-1]
 
 
-def _suffix_lcp_pairs(spark: SparkSession, sf_dir: str):
-    """(docs, fin_pairs): the (rebalanced) documents table plus the
-    capped LCPs of every rank-adjacent suffix pair — the shared
+def _suffix_neighbors(docs: DataFrame) -> DataFrame:
+    """Every suffix (doc_id, pos) of ``docs`` with its successor
+    ``next`` (struct of doc_id, pos, sarr) and ``lcp_prev`` /
+    ``lcp_next``, the capped LCPs it shares with its predecessor /
+    successor in suffix order (NULL at the two ends) — the shared
     scaffold of the maximal-repeat and repeat-profile consumers.
 
-    With documents bounded at 2^rounds tokens, the suffix ORDER comes
-    from one global row number over the direct suffix arrays
-    (order-isomorphic to the oracle's lv{rounds} ranks, so
-    ``row_number OVER (ORDER BY r, doc_id, pos)`` = row_number over
-    (sarr, doc_id, pos)), and the LCP of each adjacent pair is the
-    plain longest-common-prefix of the two arrays — one codegen
+    With documents bounded at 2^rounds tokens, the suffix ORDER is the
+    total order (sarr, doc_id, pos) over the direct suffix arrays
+    (order-isomorphic to the oracle's ``row_number OVER (ORDER BY r,
+    doc_id, pos)`` over lv{rounds}), and both neighbours come from ONE
+    bucketed window pass (``ranking.global_neighbors``: no row number,
+    no self-join).  The LCP of each adjacent pair is the plain
+    longest-common-prefix of the two arrays — one codegen
     zip_with/array_position expression, where the oracle runs the
     7-level binary walk.  The walk's padded-rank equality is real token
     equality inside both tails and its final ``least(lcp, tail_a,
@@ -4983,45 +4986,32 @@ def _suffix_lcp_pairs(spark: SparkSession, sf_dir: str):
     array-LCP exactly (referees: tests/test_round13_suffix.py,
     tests/test_round12_ops.py TestSuffixReferee, and
     fuzz_families/suffix.py)."""
-    docs = rebalance_for_cpu(load(spark, sf_dir, "documents"))
     _suffix_guard(docs)
     suf = _suffix.suffix_arrays(docs, _SUFFIX_ROUNDS)
-    rn = ranking.global_row_number(
+    nb = ranking.global_neighbors(
         suf,
         [F.col("sarr").asc(), F.col("doc_id").asc(), F.col("pos").asc()],
         bucket=_suffix.suffix_array_bucket(F.col("sarr")),
-        out_col="rn",
+        cols=["doc_id", "pos", "sarr"],
     )
-    a = rn.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("pos").alias("pos_a"),
-        F.col("sarr").alias("sa"),
-        "rn",
+
+    def lcp(a, b):
+        # index of the first elementwise mismatch (zip_with pads the
+        # shorter array with null; eqNullSafe makes pad != token); no
+        # mismatch => arrays identical => LCP = full length.  Never
+        # exceeds either tail because the arrays ARE the tails.  NULL
+        # when ``b`` (a missing neighbour) is NULL.
+        zipped = F.zip_with(a, b, lambda x, y: x.eqNullSafe(y))
+        p = F.array_position(zipped, F.lit(False))
+        return F.when(p == 0, F.size(a)).otherwise(p - 1).cast("long")
+
+    return nb.select(
+        "doc_id",
+        "pos",
+        "next",
+        lcp(F.col("sarr"), F.col("prev.sarr")).alias("lcp_prev"),
+        lcp(F.col("sarr"), F.col("next.sarr")).alias("lcp_next"),
     )
-    b = rn.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("pos").alias("pos_b"),
-        F.col("sarr").alias("sb"),
-        (F.col("rn") - F.lit(1)).alias("rn"),
-    )
-    pairs = a.join(b, "rn")
-    # LCP = index of the first elementwise mismatch (zip_with pads the
-    # shorter array with null; eqNullSafe makes pad != token); no
-    # mismatch => arrays identical => LCP = full length.  Never exceeds
-    # either tail because the arrays ARE the tails.
-    zipped = F.zip_with("sa", "sb", lambda x, y: x.eqNullSafe(y))
-    p = F.array_position(zipped, F.lit(False))
-    fin_pairs = pairs.select(
-        F.when(p == 0, F.size("sa"))
-        .otherwise(p - 1)
-        .cast("long")
-        .alias("lcp"),
-        "doc_a",
-        "pos_a",
-        "doc_b",
-        "pos_b",
-    )
-    return docs, fin_pairs
 
 
 @query("q_maximal_repeat", oracle=_maximal_repeat_oracle())
@@ -5041,10 +5031,17 @@ def q_maximal_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's 7-level binary walk over the doubling ranks gives the
     identical capped LCP (referee- and oracle-pinned).
 
-    Scale: one narrow suffix-array pass + one bucketed global row
-    number + one rn-keyed adjacency join (no partitionless window);
-    top-10 is TakeOrderedAndProject."""
-    _, fin_pairs = _suffix_lcp_pairs(spark, sf_dir)
+    Scale: one narrow suffix-array pass + one bucketed neighbour
+    window (``ranking.global_neighbors``: no row number, no adjacency
+    join, no partitionless window); top-10 is TakeOrderedAndProject."""
+    nb = _suffix_neighbors(rebalance_for_cpu(load(spark, sf_dir, "documents")))
+    pairs = nb.where(F.col("next").isNotNull()).select(
+        F.col("lcp_next").alias("lcp"),
+        F.col("doc_id").alias("doc_a"),
+        F.col("pos").alias("pos_a"),
+        F.col("next.doc_id").alias("doc_b"),
+        F.col("next.pos").alias("pos_b"),
+    )
     order = [
         F.col("lcp").desc(),
         F.col("doc_a").asc(),
@@ -5052,7 +5049,7 @@ def q_maximal_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_b").asc(),
         F.col("pos_b").asc(),
     ]
-    top = fin_pairs.orderBy(*order).limit(10)
+    top = pairs.orderBy(*order).limit(10)
     w = Window.orderBy(*order)  # 10-row table only
     return top.withColumn("rnk", F.row_number().over(w).cast("long"))
 
@@ -5222,27 +5219,19 @@ def q_repeat_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-gram; this knows HOW LONG the real shared span is, per position,
     with unbounded length.
 
-    Scale: the LCP scaffold shared with q_maximal_repeat (one suffix-
-    array pass + one global row number + the adjacency join —
-    optimization round 13), then ONE position-keyed max and ONE
+    The neighbor LCP is the larger of the LCPs with the suffix's
+    predecessor and successor in suffix order, so each position reads
+    it off its own row; a position with no neighbour (a one-suffix
+    corpus) has no neighbor LCP and drops out, as in the oracle.
+
+    Scale: the neighbour scaffold shared with q_maximal_repeat (one
+    suffix-array pass + one bucketed neighbour window), then ONE
     doc-keyed combinable rollup."""
-    docs, fin_pairs = _suffix_lcp_pairs(spark, sf_dir)
-    nl = (
-        fin_pairs.select(
-            F.col("doc_a").alias("doc_id"),
-            F.col("pos_a").alias("pos"),
-            "lcp",
-        )
-        .unionAll(
-            fin_pairs.select(
-                F.col("doc_b").alias("doc_id"),
-                F.col("pos_b").alias("pos"),
-                "lcp",
-            )
-        )
-        .groupBy("doc_id", "pos")
-        .agg(F.max("lcp").cast("long").alias("nlcp"))
-    )
+    docs = rebalance_for_cpu(load(spark, sf_dir, "documents"))
+    # greatest skips a NULL (missing) neighbour
+    nl = _suffix_neighbors(docs).select(
+        "doc_id", F.greatest("lcp_prev", "lcp_next").alias("nlcp")
+    ).where(F.col("nlcp").isNotNull())
     prof = nl.groupBy("doc_id").agg(
         F.sum(F.when(F.col("nlcp") >= _REPEAT_L, 1).otherwise(0))
         .cast("long")

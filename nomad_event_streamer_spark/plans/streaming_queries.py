@@ -395,9 +395,7 @@ def q_stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_stream_stream_join",
-    oracle="""
+_STREAM_JOIN_ORACLE = """
     SELECT p.event_id AS purchase_id, c.event_id AS click_id,
            p.user_id AS user_id,
            epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
@@ -406,8 +404,10 @@ def q_stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON p.user_id = c.user_id
      AND p.event_type = 'purchase' AND c.event_type = 'click'
      AND epoch_us(c.ts) BETWEEN epoch_us(p.ts) - 3600000000 AND epoch_us(p.ts)
-    """,
-)
+    """
+
+
+@query("q_stream_stream_join", oracle=_STREAM_JOIN_ORACLE)
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join: purchases joined to the same user's
     clicks within the preceding hour, both sides watermarked (the
@@ -415,6 +415,15 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine would buffer both streams forever).  Replayed to completion
     the result equals the batch range join exactly, so a full oracle
     applies."""
+    return _stream_click_join(spark, sf_dir, "inner")
+
+
+def _stream_click_join(
+    spark: SparkSession, sf_dir: str, how: str
+) -> DataFrame:
+    """Purchases ``how``-joined to the same user's clicks in the
+    preceding hour, both streams watermarked at 30 minutes, replayed to
+    completion through the memory sink."""
     stream = _stream_events(spark, sf_dir).withColumn(
         "ts_t", F.timestamp_micros(F.expr("ts div 1000"))
     )
@@ -441,7 +450,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p_user") == F.col("c_user"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("c_ts") <= F.col("p_ts")),
-        "inner",
+        how,
     )
     out = _run_to_memory(joined, "append")
     return out.select(
@@ -1404,7 +1413,7 @@ def q_stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_outer_join",
-    oracle="""
+    oracle=f"""
     WITH wm AS (
         SELECT least(
                  max(CASE WHEN event_type = 'click'
@@ -1413,17 +1422,7 @@ def q_stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
                           THEN epoch_us(ts) END)) - 1800000000 AS cut
         FROM events
     ),
-    m AS (
-        SELECT p.event_id AS purchase_id, c.event_id AS click_id,
-               p.user_id AS user_id,
-               epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-        FROM events p
-        JOIN events c
-          ON p.user_id = c.user_id
-         AND p.event_type = 'purchase' AND c.event_type = 'click'
-         AND epoch_us(c.ts) BETWEEN epoch_us(p.ts) - 3600000000
-                                AND epoch_us(p.ts)
-    ),
+    m AS ({_STREAM_JOIN_ORACLE}),
     u AS (
         SELECT p.event_id AS purchase_id,
                CAST(NULL AS BIGINT) AS click_id,
@@ -1462,41 +1461,7 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     1h range condition + 30min delay (without them the join buffers
     both streams forever); eviction work is proportional to state, not
     stream."""
-    stream = _stream_events(spark, sf_dir).withColumn(
-        "ts_t", F.timestamp_micros(F.expr("ts div 1000"))
-    )
-    clicks = (
-        stream.where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts_t").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "30 minutes")
-    )
-    purchases = (
-        stream.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts_t").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "30 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "leftOuter",
-    )
-    out = _run_to_memory(joined, "append")
-    return out.select(
-        "purchase_id",
-        "click_id",
-        F.col("p_user").alias("user_id"),
-        (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
-    )
+    return _stream_click_join(spark, sf_dir, "leftOuter")
 
 
 # ---------------------------------------------------------------------------

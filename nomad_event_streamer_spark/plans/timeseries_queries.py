@@ -2315,13 +2315,14 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Devices: the median is the exact lower median (value at 1-based
     rank (n+1) div 2) selected with the bucketed global-rank device
     (operators/ranking.py, bit_length(x) buckets — no partitionless
-    window over the series); run transitions are counted with a rank
-    EQUI-JOIN on rn+1 (join-free of windows entirely), the
-    q_link_predict_capped rank-select posture.
+    window over the series); a run transition is an hour whose
+    successor in time order (``ranking.global_neighbors``, one bucketed
+    window) has the other sign, counted by the same aggregate that
+    counts the observations.
 
     Scale: events collapse to the time-range-bounded hourly series
     (one combinable shuffle); everything after runs on that bounded
-    table — two rank jobs, one self-join, two 1-row reductions."""
+    table — one rank job, one neighbour window, one 1-row reduction."""
     from ..operators import ranking
 
     ev = events(spark, sf_dir)
@@ -2350,21 +2351,8 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("x") > F.col("m"), 1).otherwise(0).alias("sgn"),
         )
     )
-    r = ranking.global_row_number(
-        s,
-        [F.col("hr").asc()],
-        bucket=F.expr("hr div 64"),
-        out_col="rn",
-        # eager: both self-join sides are concurrent stages (r12 A/B)
-    ).localCheckpoint(eager=True)
-    tr = (
-        r.alias("a")
-        .join(
-            r.alias("b"),
-            (F.col("b.rn") == F.col("a.rn") + 1)
-            & (F.col("a.sgn") != F.col("b.sgn")),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_trans"))
+    r = ranking.global_neighbors(
+        s, [F.col("hr").asc()], bucket=F.expr("hr div 64"), cols=["sgn"]
     )
     agg = r.agg(
         F.count(F.lit(1)).cast("long").alias("n_obs"),
@@ -2372,8 +2360,11 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count(F.lit(1)) - F.coalesce(F.sum("sgn"), F.lit(0)))
         .cast("long")
         .alias("n_below"),
+        F.count(F.when(F.col("next.sgn") != F.col("sgn"), 1))
+        .cast("long")
+        .alias("n_trans"),
     )
-    return agg.crossJoin(F.broadcast(tr)).select(
+    return agg.select(
         "n_obs",
         "n_above",
         "n_below",
@@ -2422,13 +2413,13 @@ def q_peak_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     plateau ties exactly once per plateau edge); all integer, full
     hash gate.
 
-    Devices: time order rides the bucketed global-rank device (hr div
-    64 buckets — monotone, bounded bucket count), neighbors come from
-    TWO rank equi-joins on rn±1 (no window over the series at all),
-    top-10 is the heap operator.
+    Devices: both neighbours in time order come from one bucketed
+    window (``ranking.global_neighbors``, hr div 64 buckets — monotone,
+    bounded bucket count; no rank, no join, no window over the whole
+    series); top-10 is the heap operator.
 
     Scale: one combinable shuffle to the time-range-bounded hourly
-    table; the rank joins are equi-joins on a dense integer key."""
+    table, then one bucket-partitioned window over it."""
     from ..operators import ranking
 
     ev = events(spark, sf_dir)
@@ -2437,27 +2428,17 @@ def q_peak_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("hr")
         .agg(F.count(F.lit(1)).cast("long").alias("x"))
     )
-    r = ranking.global_row_number(
-        h,
-        [F.col("hr").asc()],
-        bucket=F.expr("hr div 64"),
-        out_col="rn",
-        # eager: the three join sides are concurrent stages (r12 A/B)
-    ).localCheckpoint(eager=True)
-    c, p, n = r.alias("c"), r.alias("p"), r.alias("n")
-    pk = (
-        c.join(p, F.col("p.rn") == F.col("c.rn") - 1)
-        .join(n, F.col("n.rn") == F.col("c.rn") + 1)
-        .where(
-            (F.col("c.x") > F.col("p.x")) & (F.col("c.x") >= F.col("n.x"))
-        )
-        .select(
-            F.col("c.hr").alias("hr"),
-            F.col("c.x").alias("x"),
-            (F.col("c.x") - F.greatest(F.col("p.x"), F.col("n.x"))).alias(
-                "prominence"
-            ),
-        )
+    r = ranking.global_neighbors(
+        h, [F.col("hr").asc()], bucket=F.expr("hr div 64"), cols=["x"]
+    )
+    # the two ends have no neighbour on one side: the NULL comparison
+    # drops them, as the oracle's inner joins do
+    pk = r.where(
+        (F.col("x") > F.col("prev.x")) & (F.col("x") >= F.col("next.x"))
+    ).select(
+        "hr",
+        "x",
+        (F.col("x") - F.greatest("prev.x", "next.x")).alias("prominence"),
     )
     order = [
         F.col("prominence").desc(),

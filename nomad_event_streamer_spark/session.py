@@ -30,8 +30,9 @@ build and on sessions handed to us by the verification driver.
 
 from __future__ import annotations
 
-import hashlib
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -64,6 +65,8 @@ BUILD_CONFS: dict[str, str] = {
 
 # SparkContext application ids the package zip has been shipped to.
 _SHIPPED_APPS: set[str] = set()
+# This process's directory of package zips, removed at exit.
+_ZIP_DIR: str | None = None
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -76,38 +79,25 @@ def ship_package(spark: SparkSession) -> None:
     local mode the worker's cwd can differ from the repo.  Shipping a
     zip via ``addPyFile`` covers both — workers prepend it to sys.path.
     """
+    global _ZIP_DIR
     sc = spark.sparkContext
     if sc.applicationId in _SHIPPED_APPS:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    # Collect source files deterministically and CONTENT-ADDRESS the zip:
-    # a pid-keyed name collides with stale zips from recycled pids (a /tmp
-    # full of old sessions' zips shipped a package missing newer modules —
-    # observed as worker-side ModuleNotFoundError), and a fixed name races
-    # concurrent drivers.  Keying by (path, mtime, size) of every member
-    # makes the cache self-invalidating; os.replace keeps creation atomic
-    # so a concurrent reader never sees a half-written archive.
-    members = []
-    digest = hashlib.md5()
-    for root, _dirs, files in sorted(os.walk(pkg_dir)):
-        for fname in sorted(files):
-            if fname.endswith(".py"):
-                full = os.path.join(root, fname)
-                rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                st = os.stat(full)
-                digest.update(
-                    f"{rel}:{st.st_mtime_ns}:{st.st_size}".encode()
-                )
-                members.append((full, rel))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"nes_spark_pkg_{digest.hexdigest()[:16]}.zip"
-    )
-    if not os.path.exists(zip_path):
-        tmp = f"{zip_path}.{os.getpid()}.tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for full, rel in members:
-                zf.write(full, rel)
-        os.replace(tmp, zip_path)
+    base = os.path.dirname(pkg_dir)
+    if _ZIP_DIR is None:
+        _ZIP_DIR = tempfile.mkdtemp(prefix="nes_spark_pkg_")
+        atexit.register(shutil.rmtree, _ZIP_DIR, ignore_errors=True)
+    # A new name per call: Spark refuses a second addPyFile of one name
+    # from another path, which two package roots loaded into one process
+    # (scripts/bench_ab.py) would otherwise ask for.
+    fd, zip_path = tempfile.mkstemp(suffix=".zip", dir=_ZIP_DIR)
+    with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+        for root, _dirs, files in sorted(os.walk(pkg_dir)):
+            for fname in sorted(files):
+                if fname.endswith(".py"):
+                    full = os.path.join(root, fname)
+                    zf.write(full, os.path.relpath(full, base))
     sc.addPyFile(zip_path)
     _SHIPPED_APPS.add(sc.applicationId)
 

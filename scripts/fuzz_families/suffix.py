@@ -3,9 +3,10 @@ the graph family): q_suffix_rank, q_maximal_repeat, q_repeat_profile
 across corpus SHAPES the fixed sf fixtures never produce — THREE
 independent implementations per seed (the graph family's pattern):
 
-1. the REAL registered queries (direct suffix arrays ranked by one
-   bucketed global rank, and the zip_with LCP of adjacent arrays,
-   operators/suffix.py) over a synthesized documents table,
+1. the REAL registered queries (direct suffix arrays ranked, or
+   paired with their neighbours, by one bucketed window, and the
+   zip_with LCP of adjacent arrays, operators/suffix.py and
+   operators/ranking.py) over a synthesized documents table,
 2. the registered DuckDB oracles (prefix doubling unrolled as
    dense_rank CTE chains, plus the binary LCP walk) over the SAME
    parquet,

@@ -9,15 +9,14 @@ a pure-Python brute force referees both.
 
 from __future__ import annotations
 
-import re
-
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import DataFrame, Window
 
 from nomad_event_streamer_spark.operators import ranking
 from nomad_event_streamer_spark.operators import suffix as sfx
-from nomad_event_streamer_spark.plans import QUERIES
+from nomad_event_streamer_spark.plans import QUERIES, corpus_queries
+from tests.test_plan_budget import plan_counts
 
 # Deliberately nasty corpus: duplicate documents (every suffix class
 # multiply occupied), one doc a prefix of another (pad ordering), deep
@@ -115,48 +114,21 @@ def test_suffix_arrays_rank_matches_doubling_chain(spark):
 
 def test_zipwith_lcp_matches_brute_force(spark):
     docs = spark.createDataFrame(_DOCS, "doc_id long, text string")
-    suf = sfx.suffix_arrays(docs, _ROUNDS)
-    rn = ranking.global_row_number(
-        suf,
-        [F.col("sarr").asc(), F.col("doc_id").asc(), F.col("pos").asc()],
-        bucket=sfx.suffix_array_bucket(F.col("sarr")),
-        out_col="rn",
-    )
-    a = rn.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("pos").alias("pos_a"),
-        F.col("sarr").alias("sa"),
-        "rn",
-    )
-    b = rn.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("pos").alias("pos_b"),
-        F.col("sarr").alias("sb"),
-        (F.col("rn") - F.lit(1)).alias("rn"),
-    )
-    zipped = F.zip_with("sa", "sb", lambda x, y: x.eqNullSafe(y))
-    p = F.array_position(zipped, F.lit(False))
-    got = {
-        (r["doc_a"], r["pos_a"], r["doc_b"], r["pos_b"]): r["lcp"]
-        for r in a.join(b, "rn")
-        .select(
-            "doc_a",
-            "pos_a",
-            "doc_b",
-            "pos_b",
-            F.when(p == 0, F.size("sa")).otherwise(p - 1).alias("lcp"),
-        )
-        .collect()
-    }
-    # brute force: sort all (truncated) tails under (tail, doc, pos),
-    # LCP of each adjacent pair
+    # the documents are shorter than the package's 2^rounds cap, so its
+    # suffix arrays are the whole tails, as in the brute force below
+    got_next, got_prev = {}, {}
+    for r in corpus_queries._suffix_neighbors(docs).collect():
+        if r["next"] is not None:
+            nxt = (r["next"]["doc_id"], r["next"]["pos"])
+            got_next[(r["doc_id"], r["pos"], *nxt)] = r["lcp_next"]
+        got_prev[(r["doc_id"], r["pos"])] = r["lcp_prev"]
+    # brute force: sort all tails under (tail, doc, pos), LCP of each
+    # adjacent pair
     sufs = []
     for d, text in _DOCS:
         ts = text.split(" ")
         for pp in range(1, len(ts) + 1):
-            sufs.append(
-                (tuple(ts[pp - 1 : pp - 1 + (1 << _ROUNDS)]), d, pp)
-            )
+            sufs.append((tuple(ts[pp - 1 :]), d, pp))
     sufs.sort()
     want = {}
     for (ta, da, pa), (tb, db, pb) in zip(sufs, sufs[1:]):
@@ -166,43 +138,27 @@ def test_zipwith_lcp_matches_brute_force(spark):
                 break
             lcp += 1
         want[(da, pa, db, pb)] = lcp
-    assert got == want
+    assert got_next == want
+    # each pair's LCP is also the second suffix's lcp_prev
+    assert got_prev == {
+        (d, p): None for _, d, p in sufs[:1]
+    } | {(db, pb): v for (_, _, db, pb), v in want.items()}
 
 
 # Plan-shape budget of the two LCP consumers, neither of which has a
-# checkpoint cut, so the whole plan is visible: Window nodes, shuffle
-# exchanges the operators require (the per-scan round-robin rebalance
-# exchanges follow the scan count) and scans of ``documents``, counted in
-# the physical plan at sf0.001.  Ranking through the doubling chain, or
-# another pass over the suffix table, exceeds it.
+# checkpoint cut, so the whole plan is visible (counts as in
+# tests/test_plan_budget.py, at sf0.001).  Both take their suffix-order
+# neighbours from one ``ranking.global_neighbors`` window; a global row
+# number with an rn-keyed adjacency join, ranking through the doubling
+# chain, or another pass over the suffix table exceeds it.
 _PLAN_BUDGET = {
-    "q_maximal_repeat": {"Window": 5, "Exchange": 6, "documents": 4},
-    "q_repeat_profile": {"Window": 8, "Exchange": 15, "documents": 9},
+    "q_maximal_repeat": {"Window": 4, "Exchange": 3, "documents": 2},
+    "q_repeat_profile": {"Window": 3, "Exchange": 5, "documents": 3},
 }
-
-
-def _plan_counts(df: DataFrame) -> dict:
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    nodes = [
-        (m.group(1), line)
-        for line in plan.splitlines()
-        if (m := re.match(r"^[\s:|+-]*(\w+)", line))
-    ]
-    return {
-        "Window": sum(n == "Window" for n, _ in nodes),
-        "Exchange": sum(
-            n == "Exchange" and "ENSURE_REQUIREMENTS" in line
-            for n, line in nodes
-        ),
-        "documents": sum(
-            n == "FileScan" and "documents.parquet" in line
-            for n, line in nodes
-        ),
-    }
 
 
 @pytest.mark.parametrize("slug", sorted(_PLAN_BUDGET))
 def test_lcp_consumer_plan_budget(spark, sf_dir, slug):
-    got = _plan_counts(QUERIES[slug](spark, sf_dir))
+    got = plan_counts(QUERIES[slug](spark, sf_dir), "documents")
     budget = _PLAN_BUDGET[slug]
     assert all(got[k] <= budget[k] for k in budget), (got, budget)
